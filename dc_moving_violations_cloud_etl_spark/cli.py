@@ -21,9 +21,12 @@ Usage::
 
 The warehouse is partitioned parquet (``violations/`` by month — the
 engine analog of the reference's month→layer routing — plus
-``weather_daily/``); ``daily-load`` is replay-safe (insert-if-absent on
-the PK) exactly like the reference's idempotency contract
-(DEPLOYMENT.md:244-250).
+``weather_daily/``). ``daily-load`` is append-only: it writes just the
+rows whose PK is absent, one new file per touched month, and never
+rewrites existing files, so it is replay-safe exactly like the
+reference's ``INSERT IGNORE`` idempotency contract
+(DEPLOYMENT.md:244-250). Files accumulate at one per touched month per
+day; ``history-load`` rewrites the table and is the compaction step.
 """
 
 from __future__ import annotations
@@ -73,12 +76,17 @@ def cmd_history_load(args) -> int:
 
 def cmd_daily_load(args) -> int:
     """Incremental load: watermark resume → bounded source scan →
-    insert-if-absent merge → rewrite touched partitions (reference
-    etl/daily_load/violation_etl_daily.py lambda_handler). Replay-safe:
-    re-running inserts nothing."""
+    rows absent from the table → append them, one file per touched
+    month (reference etl/daily_load/violation_etl_daily.py
+    lambda_handler's INSERT IGNORE). Existing files are never rewritten.
+    Replay-safe: re-running inserts nothing."""
     from . import catalog
-    from .operators.incremental import get_watermark, incremental_merge
-    from .operators.sinks import write_partitioned
+    from .operators.incremental import get_watermark, incremental_rows
+    from .operators.sinks import (
+        dedupe_by_key,
+        upsert_last_writer_wins,
+        write_partitioned,
+    )
 
     spark = _spark()
     source = catalog.violations(spark, args.sf_dir)
@@ -95,37 +103,47 @@ def cmd_daily_load(args) -> int:
               + dt.timedelta(days=1))
     )
     wm_before = None if cold else get_watermark(existing, "violation_date")
-    merged = incremental_merge(
+    n_before = 0 if cold else existing.count()
+    batch = incremental_rows(
         existing,
         source,
+        wm_before,
         date_col="violation_date",
         key_cols=["violation_id"],
         cold_start_default=dt.date(1900, 1, 1),
         today=today,
     )
-    n_before = existing.count()
-    n_after = merged.count()
-    if n_after != n_before:
-        write_partitioned(merged, f"{args.warehouse}/violations", "month")
+    inserted = 0
+    if batch is not None:
+        # one task (→ one file) per touched month; the persisted batch
+        # serves both the count and the write
+        batch = batch.repartition("month").persist()
+        inserted = batch.count()
+        if inserted:
+            write_partitioned(
+                batch, f"{args.warehouse}/violations", "month", mode="append"
+            )
+        batch.unpersist()
 
     # weather twin (reference weather_etl_daily.lambda_handler):
-    # last-writer-wins upsert keyed on weather_date
-    from .operators.sinks import upsert_last_writer_wins
-
-    w_src = catalog.weather_daily(spark, args.sf_dir)
+    # last-writer-wins upsert keyed on weather_date, rewritten only when
+    # some source row is not already present exactly (new date or
+    # changed values; exceptAll compares NULLs as equal)
+    w_src = dedupe_by_key(
+        catalog.weather_daily(spark, args.sf_dir), ["weather_date"]
+    )
     try:
         w_existing = spark.read.parquet(f"{args.warehouse}/weather_daily")
     except Exception:
         w_existing = w_src.limit(0)
-    w_before = w_existing.count()
-    w_merged = upsert_last_writer_wins(w_existing, w_src, ["weather_date"])
-    w_after = w_merged.count()
-    if w_after != w_before:
+    w_changed = w_src.exceptAll(w_existing.select(*w_src.columns)).count()
+    if w_changed:
         # two-phase rewrite: the merge reads the current table, so the
         # new version lands in a scratch dir first (overwriting a path
         # that is also an input is rejected by Spark)
         import shutil
 
+        w_merged = upsert_last_writer_wins(w_existing, w_src, ["weather_date"])
         w_merged.coalesce(1).write.mode("overwrite").parquet(
             f"{args.warehouse}/weather_daily_next"
         )
@@ -139,8 +157,8 @@ def cmd_daily_load(args) -> int:
 
     print(
         f"daily-load complete: watermark_before={wm_before} "
-        f"as_of={today} inserted={n_after - n_before} total={n_after} "
-        f"weather_upserted={w_after - w_before}"
+        f"as_of={today} inserted={inserted} total={n_before + inserted} "
+        f"weather_upserted={w_changed}"
     )
     return 0
 

@@ -38,6 +38,7 @@ N_MINHASH = 16
 N_BANDS = 4
 BAND_WIDTH = N_MINHASH // N_BANDS
 JACCARD_THRESHOLD = 0.5
+JACCARD_DECIMALS = 6  # _jaccard's rounding; _size_ratio_ok's bound uses it
 
 # Universal-hash MinHash family: h_s(x) = (a_s·h(x) + b_s) mod p over a
 # single 31-bit base hash h(x) (md5-prefix). One md5 per shingle instead
@@ -92,6 +93,16 @@ def _fan_out(df: DataFrame) -> DataFrame:
     if splits < target:
         return df.repartition(target)
     return df
+
+
+def _shuffle_width(spark) -> int:
+    """The configured ``spark.sql.shuffle.partitions``; the default
+    parallelism when the value is not a number (platforms that accept
+    ``auto``)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
 
 
 def _bytes_conf(v: str) -> int:
@@ -161,18 +172,22 @@ def _jaccard(a: F.Column, b: F.Column) -> F.Column:
     division are bit-identical to the two-set form."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = (F.size(a) + F.size(b)).cast("double") - inter
-    return F.round(inter / union, 6)
+    return F.round(inter / union, JACCARD_DECIMALS)
 
 
-def _size_ratio_ok(a: F.Column, b: F.Column) -> F.Column:
-    """Exact Jaccard-threshold size prefilter (r15, guide §1.2): for
-    sets, J(a,b) ≤ min(|a|,|b|) / max(|a|,|b|), so any pair with
-    2·min < max sits strictly below JACCARD_THRESHOLD = 0.5 and is
-    guaranteed to fail the ``jaccard >= threshold`` filter every
-    caller applies — dropping it FIRST skips the per-pair hash-set
-    intersect (the dominant per-row cost of every verify join).
-    Integer arithmetic, engine-independent, result-identical."""
-    return 2 * F.least(F.size(a), F.size(b)) >= F.greatest(
+def _size_ratio_ok(
+    a: F.Column, b: F.Column, threshold: float = JACCARD_THRESHOLD
+) -> F.Column:
+    """Jaccard-threshold size prefilter (r15, guide §1.2): for sets,
+    J(a,b) ≤ min(|a|,|b|) / max(|a|,|b|), and ``_jaccard``'s rounding
+    moves J by at most half a unit in its last decimal, so a pair with
+    min < (threshold − 10^-JACCARD_DECIMALS)·max is guaranteed to fail
+    the ``jaccard >= threshold`` filter every caller applies — dropping
+    it FIRST skips the per-pair hash-set intersect (the dominant
+    per-row cost of every verify join). Result-identical for any
+    threshold in (0, 1]: the bound is derived, never hand-scaled."""
+    bound = threshold - 10.0**-JACCARD_DECIMALS
+    return F.least(F.size(a), F.size(b)) >= F.lit(bound) * F.greatest(
         F.size(a), F.size(b)
     )
 
@@ -289,8 +304,7 @@ def spread_by_doc(df: DataFrame) -> DataFrame:
     with the extra exchange (its band window re-shuffles immediately),
     while the verify-heavy consumers (assign, incremental, recall,
     band-tradeoff) each measured 20-30% faster."""
-    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(width, "doc_id")
+    return df.repartition(_shuffle_width(df.sparkSession), "doc_id")
 
 
 def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sinks import insert_if_absent
+from .sinks import rows_to_insert
 
 
 def get_watermark(existing: DataFrame, date_col: str) -> dt.date | None:
@@ -48,6 +48,34 @@ def incremental_range(
     return start, end
 
 
+def incremental_rows(
+    existing: DataFrame,
+    source: DataFrame,
+    watermark: dt.date | None,
+    date_col: str,
+    key_cols: list[str],
+    cold_start_default: dt.date,
+    today: dt.date,
+) -> DataFrame | None:
+    """One incremental batch as the rows to append: bounded source scan
+    from ``watermark`` (J1–J3) → ``rows_to_insert``; None when already up
+    to date. The date predicate is pushed down to the source scan by
+    Catalyst (the engine analog of the reference's server-side
+    ``where=ISSUE_DATE >= ms AND < ms``, violation_etl_daily.py:168).
+
+    Replay-safe: the anti-join against ``existing`` yields no rows for a
+    batch that is already loaded.
+    """
+    rng = incremental_range(watermark, cold_start_default, today)
+    if rng is None:
+        return None
+    start, end = rng
+    fresh = source.where(
+        (F.col(date_col) >= F.lit(start)) & (F.col(date_col) <= F.lit(end))
+    )
+    return rows_to_insert(existing, fresh, key_cols)
+
+
 def incremental_merge(
     existing: DataFrame,
     source: DataFrame,
@@ -56,20 +84,16 @@ def incremental_merge(
     cold_start_default: dt.date,
     today: dt.date,
 ) -> DataFrame:
-    """One incremental batch: watermark → bounded source scan → idempotent
-    merge. The date predicate is pushed down to the source scan by
-    Catalyst (the engine analog of the reference's server-side
-    ``where=ISSUE_DATE >= ms AND < ms``, violation_etl_daily.py:168).
-
-    Replay-safe: running the same batch twice is a no-op because the
-    sink is insert-if-absent on the PK.
-    """
-    wm = get_watermark(existing, date_col)
-    rng = incremental_range(wm, cold_start_default, today)
-    if rng is None:
-        return existing
-    start, end = rng
-    fresh = source.where(
-        (F.col(date_col) >= F.lit(start)) & (F.col(date_col) <= F.lit(end))
+    """One incremental batch as the whole merged table: ``existing`` plus
+    ``incremental_rows`` from its own watermark. Running the same batch
+    twice is a no-op."""
+    new = incremental_rows(
+        existing,
+        source,
+        get_watermark(existing, date_col),
+        date_col,
+        key_cols,
+        cold_start_default,
+        today,
     )
-    return insert_if_absent(existing, fresh, key_cols)
+    return existing if new is None else existing.unionByName(new)

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
-from .dedup import _fan_out
+from .dedup import _fan_out, _shuffle_width
 
 TOP_K = 5
 QUERY_MOD = 100  # query set = vec_id % 100 == 0
@@ -408,14 +408,11 @@ def pq_encode(embeddings: DataFrame) -> DataFrame:
     # partial agg combines map-side. Cheap at any scale: the code
     # table is the ~32x-compressed index — one extra shuffle of it is
     # the smallest shuffle in the family.
-    width = int(
-        embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("vec_id", "sub", "code")
-        .repartition(width, "vec_id")
+        .repartition(_shuffle_width(embeddings.sparkSession), "vec_id")
     )
 
 

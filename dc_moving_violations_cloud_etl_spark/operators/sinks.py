@@ -17,16 +17,21 @@ twice → no duplicate PKs", reference DEPLOYMENT.md:244-250) — holds by
 construction: merging the same batch twice is a fixpoint.
 
 Scale posture:
-- ``insert_if_absent`` is a left-anti join on the PK — at 100 TB this
-  shuffles on the key unless the table is bucketed by PK; AQE converts
-  to broadcast when the incoming batch is small (the daily case: one
-  day of data vs the full table).
-- ``upsert_last_writer_wins`` is a per-key window over the union — the
-  shuffle partitions by PK only, and with daily batches the union's
-  incoming side is tiny. For repeated merges, writing the table
-  partitioned by ``month`` (see ``write_partitioned``) confines the
-  rewrite to the touched partitions (dynamic partition overwrite), the
-  parquet analog of MySQL updating only the affected rows.
+- ``rows_to_insert`` (the kernel of ``insert_if_absent``) is a
+  left-anti join on the PK — at 100 TB this shuffles on the key unless
+  the table is bucketed by PK; AQE converts to broadcast when the
+  incoming batch is small (the daily case: one day of data vs the full
+  table).
+- ``upsert_last_writer_wins`` is an anti-join of the table against the
+  batch's keys plus the batch — the shuffle partitions by PK only, and
+  with daily batches the incoming side is tiny.
+- Writes are append-only for ``INSERT IGNORE``: ``cli daily-load``
+  appends only ``rows_to_insert`` to the ``month``-partitioned table
+  (``write_partitioned(mode="append")``), one new file per touched
+  month, so a day writes bytes in proportion to its batch, never to the
+  table — the parquet analog of MySQL inserting only the new rows.
+  Files accumulate at one per touched month per day; ``history-load``
+  rewrites the table, which is the compaction step.
 """
 
 from __future__ import annotations
@@ -53,18 +58,22 @@ def _keys_match(left: DataFrame, right: DataFrame, keys: Sequence[str]):
     return cond
 
 
-def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """``INSERT IGNORE`` semantics: keep every existing row; add incoming
-    rows whose key is absent from existing (first-writer-wins). Incoming
-    intra-batch duplicates keep one deterministic representative.
-    Idempotent for NULL key values too (null-safe anti-join).
-    """
+def rows_to_insert(existing: DataFrame, incoming: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """The rows ``INSERT IGNORE`` adds: incoming rows whose key is absent
+    from existing (first-writer-wins), intra-batch duplicates reduced to
+    one deterministic representative. NULL keys match NULL keys
+    (null-safe anti-join), so an append of this set is idempotent."""
     incoming = dedupe_by_key(incoming, keys)
     ex_keys = existing.select(*keys).distinct()
-    fresh = incoming.join(
+    return incoming.join(
         ex_keys, _keys_match(incoming, ex_keys, keys), "left_anti"
     )
-    return existing.unionByName(fresh)
+
+
+def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """``INSERT IGNORE`` semantics as the whole resulting table: every
+    existing row plus ``rows_to_insert``."""
+    return existing.unionByName(rows_to_insert(existing, incoming, keys))
 
 
 def _keep_one(df: DataFrame, keys: Sequence[str], rep: "F.Column", out_cols: Sequence[str]) -> DataFrame:
@@ -150,9 +159,9 @@ def write_partitioned(
     """Partitioned-parquet table layout (the engine analog of the
     reference's month→MapServer-layer routing table,
     reference etl/daily_load/violation_etl_daily.py:21-41): queries with
-    a ``month`` predicate prune partitions at planning time, and
-    incremental merges rewrite only touched months via dynamic partition
-    overwrite."""
+    a ``month`` predicate prune partitions at planning time. ``overwrite``
+    replaces only the months present in ``df`` (dynamic partition
+    overwrite); ``append`` adds files beside the existing ones."""
     (
         df.write.mode(mode)
         .option("partitionOverwriteMode", "dynamic")
