@@ -22,7 +22,9 @@ Scale notes (100 TB posture):
   sort-merge on the cluster; all other columns are narrow projections that
   stay in whole-stage codegen.
 - ``weather_daily`` is dimension-sized (1 row/day): ~30 aggregated rows
-  replicated over the date spine → always broadcast-joined to the fact.
+  replicated over the date spine, kept on one partition
+  (``dimension_sized``) and joined to the fact only after the fact is
+  aggregated to the same date grain.
 """
 
 from __future__ import annotations
@@ -207,6 +209,24 @@ def release(spark: SparkSession | None = None) -> None:
             pass
 
 
+def dimension_sized(df: DataFrame) -> DataFrame:
+    """Put date-grain data on one partition.
+
+    The one rule: use it only on date-grain data — at most one row per
+    day of the date spine, times a small key (month × agency, day ×
+    hour). Never on the fact. A ``SinglePartition`` child satisfies the
+    clustered, ordered and all-tuples distributions, so a later
+    ``groupBy``, ``orderBy`` or global aggregate plans with no exchange:
+    no range-sampling job, no second shuffle. A ``shuffle_hash`` join of
+    two such inputs needs no exchange either, unless the planner
+    estimates a side above ``spark.sql.maxSinglePartitionBytes``; then it
+    re-shuffles both sides, which stays exact. Such estimates come from a
+    cache that is not materialized yet (its size is guessed from the
+    plan that builds it) or from a fact far larger than the fixtures.
+    """
+    return df.coalesce(1)
+
+
 def violations(
     spark: SparkSession, sf_dir: str, materialized: bool = True
 ) -> DataFrame:
@@ -228,14 +248,17 @@ def weather_daily(
     """The 9-column ``weather_daily`` daily dimension (FIXTURES.md §1.2)."""
 
     def build() -> DataFrame:
-        # dimension-sized (1 row/day): coalesce to one partition before
-        # the persist — the build's groupBy shuffle otherwise pins the
-        # cache at shuffle.partitions tiny blocks and every downstream
-        # query pays a 32-task stage to scan ~2.5k rows. One partition is
-        # also exactly the broadcast-side layout the joins want.
-        return build_weather_daily(
-            base(spark, sf_dir, "events"), base(spark, sf_dir, "lineitem")
-        ).coalesce(1)
+        # one row per day: one partition before the persist — the build's
+        # groupBy shuffle otherwise pins the cache at shuffle.partitions
+        # tiny blocks and every downstream query pays a wide stage to
+        # scan ~2.5k rows. The cached scan then reports SinglePartition,
+        # which is what lets the reference joins pair it with a one-
+        # partition per-day fact aggregate without an exchange.
+        return dimension_sized(
+            build_weather_daily(
+                base(spark, sf_dir, "events"), base(spark, sf_dir, "lineitem")
+            )
+        )
 
     if not materialized:
         return build()

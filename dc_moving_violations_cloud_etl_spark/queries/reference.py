@@ -6,11 +6,19 @@ verification aggregates (reference DEPLOYMENT.md:231-241). Date literals
 are transposed from the reference's 2024-25 window into the fixture's
 1995-2001 window, preserving each predicate's selectivity role.
 
-Plan posture per query (checked via .explain, see tests):
-- every aggregation is a partial+final HashAggregate over low-cardinality
-  keys — map-side combine means the shuffle carries only group rows;
-- the fact⋈dimension joins broadcast the ~2.5k-row weather side
-  (explicitly hinted, matching what AQE would pick);
+Plan posture per query (checked via the executed plan, see tests):
+- every aggregation over the fact is a partial+final HashAggregate over
+  low-cardinality keys — map-side combine means the shuffle carries only
+  group rows;
+- everything after the first aggregate is date-grain (at most one row per
+  day, times a small key), so it goes to one partition
+  (``catalog.dimension_sized``): the second aggregate level, the sort and
+  the join then plan with no exchange — no range-sampling job, no second
+  shuffle. Every query runs in at most two jobs (Qe and V2: one);
+- the fact⋈dimension queries aggregate the fact to ``violation_date``
+  first, then join the one-partition per-day rows to the one-partition
+  weather cache with a ``shuffle_hash`` hint: no broadcast of the weather
+  side and no probe of the raw fact rows;
 - filters and column pruning reach the parquet scan through the view
   projections (verified: PushedFilters/ReadSchema in the formatted plan).
 """
@@ -32,11 +40,11 @@ QB_CUTOFF = "1998-01-01"
 
 def _qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = catalog.violations(spark, sf_dir)
-    return (
-        v.groupBy("month", "issuing_agency_name")
-        .agg(F.count(F.lit(1)).alias("tickets_count"))
-        .orderBy("month", "issuing_agency_name")
-    )
+    return catalog.dimension_sized(
+        v.groupBy("month", "issuing_agency_name").agg(
+            F.count(F.lit(1)).alias("tickets_count")
+        )
+    ).orderBy("month", "issuing_agency_name")
 
 
 register(
@@ -83,7 +91,9 @@ WHERE violation_date >= DATE '{QB_CUTOFF}'
 
 def _qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = catalog.violations(spark, sf_dir)
-    daily = v.groupBy("violation_date").agg(F.count(F.lit(1)).alias("daily_tickets"))
+    daily = catalog.dimension_sized(
+        v.groupBy("violation_date").agg(F.count(F.lit(1)).alias("daily_tickets"))
+    )
     return (
         daily.withColumn("weekday", dayname(F.col("violation_date")))
         .groupBy("weekday")
@@ -121,19 +131,39 @@ ORDER BY CASE weekday
 )
 
 
-def _rainy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _daily_weather_join(
+    spark: SparkSession, sf_dir: str, **per_day: F.Column
+) -> DataFrame:
+    """The fact aggregated to ``violation_date`` with the named
+    decomposable aggregates, joined to ``weather_daily`` on the date.
+
+    Both sides are date-grain and on one partition, so the
+    ``shuffle_hash`` join plans with no exchange and no broadcast; the
+    join probes ~2.5k per-day rows instead of every fact row. Callers
+    re-aggregate the per-day columns (sums of counts), which is exact.
+    """
     v = catalog.violations(spark, sf_dir)
     w = catalog.weather_daily(spark, sf_dir)
-    return v.join(
-        F.broadcast(w), v.violation_date == w.weather_date, "inner"
+    days = catalog.dimension_sized(
+        v.groupBy("violation_date").agg(
+            *(agg.alias(name) for name, agg in per_day.items())
+        )
+    )
+    return days.join(
+        w.hint("shuffle_hash"), days.violation_date == w.weather_date, "inner"
     )
 
 
 def _qd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # sum over matched days is NULL on an empty match, count(*) is 0
     return (
-        _rainy_join(spark, sf_dir)
+        _daily_weather_join(spark, sf_dir, tickets=F.count(F.lit(1)))
         .where(F.col("is_rain") == 1)
-        .agg(F.count(F.lit(1)).alias("rainy_day_tickets"))
+        .agg(
+            F.coalesce(F.sum("tickets"), F.lit(0))
+            .cast("long")
+            .alias("rainy_day_tickets")
+        )
     )
 
 
@@ -151,8 +181,8 @@ register(
         "qd_rainy_day_tickets",
         _qd,
         _QD_SQL,
-        doc="Qd: tickets on rainy days — broadcast date-join + flag filter "
-        "(reference analysis_queries.sql:37-43)",
+        doc="Qd: tickets on rainy days — per-day fact aggregate ⋈ weather + "
+        "flag filter (reference analysis_queries.sql:37-43)",
         tags=("reference", "join"),
     )
 )
@@ -199,7 +229,7 @@ ORDER BY year_month_
 def _qf(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = catalog.violations(spark, sf_dir)
     d = F.col("violation_desc")
-    return (
+    return catalog.dimension_sized(
         v.where(
             d.like("%MPH OVER%")
             & ~d.like("%UP TO TEN MPH OVER%")
@@ -207,8 +237,7 @@ def _qf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("month")
         .agg(exact_decimal_sum(F.col("fine_amount")).alias("total_fines"))
-        .orderBy("month")
-    )
+    ).orderBy("month")
 
 
 register(
@@ -236,10 +265,12 @@ ORDER BY month
 
 def _qg(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = catalog.violations(spark, sf_dir)
-    per_day_hour = v.groupBy(
-        F.to_date("issue_date").alias("d"),
-        F.hour("issue_date").cast("long").alias("hour_of_day"),
-    ).agg(F.count(F.lit(1)).alias("c"))
+    per_day_hour = catalog.dimension_sized(
+        v.groupBy(
+            F.to_date("issue_date").alias("d"),
+            F.hour("issue_date").cast("long").alias("hour_of_day"),
+        ).agg(F.count(F.lit(1)).alias("c"))
+    )
     return (
         per_day_hour.groupBy("hour_of_day")
         .agg(F.avg("c").alias("avg_tickets"))
@@ -273,17 +304,18 @@ ORDER BY hour_of_day
 
 
 def _qh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    j = _rainy_join(spark, sf_dir)
     acc = F.col("accident_indicator")
+    j = _daily_weather_join(
+        spark,
+        sf_dir,
+        acc_day=F.sum(F.when(acc == "Y", 1).otherwise(0)),
+        non_acc_day=F.sum(F.when(acc.isNull() | (acc != "Y"), 1).otherwise(0)),
+    )
     return (
         j.groupBy("is_rain")
         .agg(
-            F.sum(F.when(acc == "Y", 1).otherwise(0)).cast("long").alias(
-                "accident_tickets"
-            ),
-            F.sum(F.when(acc.isNull() | (acc != "Y"), 1).otherwise(0))
-            .cast("long")
-            .alias("non_accident_tickets"),
+            F.sum("acc_day").cast("long").alias("accident_tickets"),
+            F.sum("non_acc_day").cast("long").alias("non_accident_tickets"),
         )
         .orderBy("is_rain")
     )

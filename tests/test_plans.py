@@ -1,7 +1,8 @@
 """Physical-plan assertions (SURVEY.md §4): the optimizations the engine
-relies on must actually appear in the executed plan — broadcast of the
-dimension side, predicate/column pushdown to the parquet scan, and
-whole-stage codegen on the reference query surface."""
+relies on must actually appear in the executed plan — the fact
+aggregated to the date grain before the dimension join, predicate/column
+pushdown to the parquet scan, and whole-stage codegen on the reference
+query surface."""
 
 from __future__ import annotations
 
@@ -18,12 +19,79 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_qd_join_is_broadcast(spark, sf_dir):
-    """E1/O9: the fact⋈weather join must broadcast the ~2.5k-row
-    dimension, never shuffle the fact side."""
-    plan = _plan(QUERIES["qd_rainy_day_tickets"].build(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+def _unwrap(node):
+    """Step through AQE's wrapper and query stages to the plan they hold."""
+    while True:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            node = node.executedPlan()
+        elif name.endswith("QueryStageExec"):
+            node = node.plan()
+        else:
+            return node
+
+
+def _own_operators(node):
+    """The query's own physical operators, top-down. A cached relation
+    is a leaf here: its InMemoryRelation subtree (e.g. the violations
+    cache's own lineitem⋈orders broadcast) belongs to the cache, not
+    the query."""
+    node = _unwrap(node)
+    yield node
+    cs = node.children()
+    for i in range(cs.size()):
+        yield from _own_operators(cs.apply(i))
+
+
+# operators a join side may pass through without leaving its stage
+_SAME_STAGE = {
+    "WholeStageCodegenExec",
+    "InputAdapter",
+    "CoalesceExec",
+    "ProjectExec",
+    "FilterExec",
+}
+
+
+def _side_head(node):
+    """The first operator below ``node`` that is not a same-stage
+    pass-through: an exchange, an aggregate or a scan."""
+    node = _unwrap(node)
+    while node.getClass().getSimpleName() in _SAME_STAGE:
+        node = _unwrap(node.children().apply(0))
+    return node
+
+
+def test_weather_joins_aggregate_the_fact_first(spark, sf_dir):
+    """E1/O9, made strict: the fact never reaches the weather join raw.
+    In Q0, Qd and Qh the join's fact side is a HashAggregate keyed on
+    ``violation_date`` with no exchange between it and the join, the
+    other side is the cached weather scan, and nothing is broadcast or
+    sort-merged. Only the query's own operators are inspected."""
+    for name in (
+        "q0_flagship_rainy_count",
+        "qd_rainy_day_tickets",
+        "qh_accidents_rain_vs_dry",
+    ):
+        df = QUERIES[name].build(spark, sf_dir)
+        df.collect()  # the final AQE plan
+        ops = list(_own_operators(df._jdf.queryExecution().executedPlan()))
+        kinds = [op.getClass().getSimpleName() for op in ops]
+        for bad in ("SortMergeJoinExec", "BroadcastExchangeExec"):
+            assert bad not in kinds, f"{name}: {bad} in {kinds}"
+        joins = [op for op in ops if op.getClass().getSimpleName().endswith("JoinExec")]
+        assert len(joins) == 1, f"{name}: {kinds}"
+        heads = [_side_head(joins[0].left()), _side_head(joins[0].right())]
+        head_kinds = sorted(h.getClass().getSimpleName() for h in heads)
+        assert head_kinds == ["HashAggregateExec", "InMemoryTableScanExec"], (
+            f"{name}: join sides reach {head_kinds} — an exchange or a raw "
+            f"fact scan sits under the join"
+        )
+        agg = next(h for h in heads if h.getClass().getSimpleName() == "HashAggregateExec")
+        keys = agg.groupingExpressions()
+        assert [keys.apply(i).name() for i in range(keys.size())] == [
+            "violation_date"
+        ], f"{name}: fact aggregate keyed on {agg.groupingExpressions()}"
 
 
 def test_qb_filter_pushed_to_scan(spark, sf_dir):

@@ -15,7 +15,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # (query, what the plan must show)
 AUDITED = [
-    ("qd_rainy_day_tickets", "dimension broadcast; no sort-merge on the fact"),
+    (
+        "qd_rainy_day_tickets",
+        "fact aggregated to violation_date, one partition, shuffle_hash "
+        "join to the one-partition weather cache; no broadcast, no exchange "
+        "at the join",
+    ),
     ("qa_monthly_agency_tickets", "partial+final hash aggregate, codegen spans"),
     ("qf_monthly_speeding_fines", "LIKE filters evaluated pre-shuffle in codegen"),
     ("dedup_minhash_assign", "persisted signature scan; band equi-join; no cross join"),
@@ -345,11 +350,16 @@ AUDITED = [
 
 
 def main() -> None:
+    from dc_moving_violations_cloud_etl_spark import catalog
     from dc_moving_violations_cloud_etl_spark.queries import QUERIES, get_queries
     from dc_moving_violations_cloud_etl_spark.session import get_spark
 
     get_queries()
     spark = get_spark(app_name="plan-dump")
+    # plan every audited query against materialized caches, as a serving
+    # session does; a cold cache's size estimate changes the join plan
+    catalog.violations(spark, SF_DIR).count()
+    catalog.weather_daily(spark, SF_DIR).count()
 
     out = [
         "# PLANS — physical-plan audit (auto-generated)",

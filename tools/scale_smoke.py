@@ -36,7 +36,7 @@ SCALED_TABLES = {
 LINKED_TABLES = ["region", "nation", "customer", "supplier", "part"]
 
 DEFAULT_QUERIES = [
-    "qd_rainy_day_tickets",          # broadcast date join
+    "qd_rainy_day_tickets",          # per-day fact agg ⋈ weather
     "qa_monthly_agency_tickets",     # partial+final agg
     "tpch_q1_pricing_summary",       # wide decimal agg over lineitem
     "dedup_minhash_assign",          # sketch + banded keeper election
