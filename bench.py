@@ -33,53 +33,46 @@ window. Defenses, in run order:
 
 0. COOLDOWN gate (r13, VERDICT r12 rec #1): two consecutive official
    runs landed inside co-tenant load windows because the close-out
-   bench starts at whatever load the round end hits. Before the first
-   measured pass (and again before a gate retry) the CPU probe must
-   read under ``SPARK_GRAFT_BENCH_CALIB_MAX`` (default 0.85 s; idle
-   band is ~0.5-0.7 s) — otherwise sleep and re-probe, bounded at
+   bench starts at whatever load the round end hits. Before the
+   measured pass the CPU probe must read under
+   ``SPARK_GRAFT_BENCH_CALIB_MAX`` (default 0.85 s; idle band is
+   ~0.5-0.7 s) — otherwise sleep and re-probe, bounded at
    ``SPARK_GRAFT_BENCH_COOLDOWN_TRIES`` attempts so the driver is
    never blocked indefinitely. All probes are recorded
    (``calib_cooldown_sec``), including a timed-out wait.
 1. MID-RUN probes: the CPU calibration probe also runs between query
    groups (after headline, after extensions), recorded as
    ``calib_mid_sec`` — a contention window inside the run is visible.
-2. ACCEPTANCE gate: after the measured pass, each query group
-   (headline / extensions / streaming) is compared against the most
-   recent comparable passes in BENCH_DETAIL_history.jsonl (same sf,
-   >= 3 passes) by the MEDIAN of per-query ratios over the
-   intersection of query names (r12, ADVICE r11: raw group-total sums
-   tripped a guaranteed spurious re-run whenever the catalog changed,
-   and a single contention-hypersensitive query could 1.6x a group on
-   its own; a name must appear in >= 2 history passes to contribute,
-   ADVICE r12). If any group's ratio median exceeds 1.25, ONLY the
-   deviant groups re-run once after a cooldown (r13, VERDICT r12
-   rec #7: a full-pass retry re-timed ~8 minutes of clean extension
-   queries to re-judge a 30-second headline; group-scoped retries keep
-   the close-out cycle under 15 minutes) and each deviant group keeps
-   whichever measurement has the smaller ratio median. The full first
-   pass lands in the history flagged ``contaminated`` whenever any of
-   its groups were replaced.
-3. SPLICE fallback (r13, VERDICT r12 rec #1): a group deviant on BOTH
-   measurements (sustained host load) is stamped into
-   ``accept.kept_deviations`` / ``untrusted_queries`` as before
-   (VERDICT r11 rec #2) and then REPLACED with the same group's
-   per-query block from the most recent in-band history pass, labeled
-   ``accept.spliced_groups`` (``from_utc``) + top-level
-   ``spliced_queries``; the displaced measurements stay auditable in
-   ``replaced_measurements``. The headline ``value`` therefore always
-   reflects an in-band reading — measured this run when possible, the
-   last clean pass otherwise, never a load artifact. The history line
-   keeps ``gate_deviant`` so spliced (copied) numbers never feed
-   future acceptance medians (ADVICE r11).
-4. PER-QUERY outlier stamp (r13, ADVICE r12): independent of group
-   medians, any single query > 3x its history median is appended to
-   ``untrusted_queries`` (ratios in ``per_query_outliers``) so a lone
-   contaminated reading inside an in-band group is still flagged for
-   per-query diff tooling.
+2. ACCEPTANCE gate — flag, never re-measure or copy: after the one
+   measured pass, each query group (headline / extensions / streaming)
+   is compared against the most recent comparable passes in
+   BENCH_DETAIL_history.jsonl (same sf and cpus, >= 3 passes) by the
+   MEDIAN of per-query ratios over the intersection of query names
+   (r12, ADVICE r11: raw group-total sums tripped on every catalog
+   change, and one contention-hypersensitive query could 1.6x a group
+   on its own; a name must appear in >= 2 history passes to
+   contribute, ADVICE r12). A group whose ratio median exceeds 1.25
+   makes the pass ``suspect``: the group is named in
+   ``accept.kept_deviations`` with its ratio, its queries land in
+   ``untrusted_queries``, and the history line carries ``gate_deviant``
+   so it never feeds a future gate. Independently, any single query
+   > 3x its history median — and, once such a spike proves a burst,
+   every 2-3x co-traveler of the same pass — is stamped into
+   ``untrusted_queries`` (``per_query_outliers``). Every number in the
+   record is the one this run measured: keeping the faster of two
+   readings, or copying an older pass in, is a selection step, not a
+   measurement.
+
+``python bench.py --only NAME ...`` times just the named queries after
+the same cooldown and warm-up, each as the median of three cache-
+isolated passes (the ``HEAVY_EXTENSIONS`` rule), and prints one JSON
+line with the passes and the calibration probes. A subset pass is
+never gated and never written to the detail or history records.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -231,22 +224,6 @@ def median_of_completed(
     ]
 
 
-def extensions_total_of(entry: dict, headline: list[str]) -> float:
-    """Extension-group wall-clock of one detail/history entry: the sum
-    of its per-query timings that are neither headline nor streaming.
-    History lines predate the summary's precomputed ``extensions_total``
-    field, so the gate recomputes it uniformly from the queries map."""
-    hl = set(headline)
-    return round(
-        sum(
-            v
-            for n, v in entry.get("queries", {}).items()
-            if n not in hl and not n.startswith("stream_")
-        ),
-        4,
-    )
-
-
 def group_of(name: str, headline: list[str]) -> str:
     """The gate group a per-query timing belongs to: headline queries
     feed ``value``, ``stream_*`` lifecycle queries feed
@@ -268,13 +245,11 @@ def comparable_history_entries(
     """The most recent comparable history passes: same sf, SAME CORE
     COUNT (r14: the driver also runs the bench at a lower
     ``SPARK_GRAFT_CPUS`` to measure scaling — comparing a low-core
-    pass against 32-core medians would trip every group gate, retry
-    slowly, and then SPLICE 32-core readings into a low-core record,
-    corrupting the scaling measurement; lines written before the
-    ``cpus`` stamp are treated as the historical 32-core default),
-    not flagged
-    ``contaminated`` (gate-rejected loser) or ``gate_deviant``
-    (accepted-but-still-deviant under sustained load, ADVICE r11 —
+    pass against 32-core medians would flag every group of a clean
+    low-core pass; lines written before the ``cpus`` stamp are treated
+    as the historical 32-core default), not flagged ``contaminated``
+    (the first pass of a retired r11-r15 gate retry — the history still
+    holds 19 of them) or ``gate_deviant`` (a suspect pass, ADVICE r11 —
     letting those into the baseline would drag the acceptance medians
     upward and weaken the gate they feed), complete groups. Returns
     None when fewer than ``min_passes`` comparable passes exist — the
@@ -348,25 +323,20 @@ def per_query_outliers(
     cur_queries: dict,
     pq_medians: dict | None,
     threshold: float = 3.0,
-    skip: set | None = None,
 ) -> dict[str, float]:
     """Single-query contamination stamp (ADVICE r12): the group-median
     gate deliberately ignores lone spikes, so a 23.7 s reading inside
     an otherwise in-band group could still land as an unqualified
     latest reading. Any query whose current/history-median ratio
     exceeds ``threshold`` is returned (name -> ratio) for appending to
-    ``untrusted_queries`` even when no group median trips. ``skip``
-    names (e.g. history-spliced values, which are not this run's
-    measurements) are excluded."""
+    ``untrusted_queries`` even when no group median trips."""
     if not pq_medians:
         return {}
-    skip = skip or set()
     out = {}
     for n, v in cur_queries.items():
         base = pq_medians.get(n)
         if (
-            n not in skip
-            and base
+            base
             and isinstance(v, (int, float))
             and v > 0
             and v / base > threshold
@@ -410,8 +380,8 @@ def group_ratio_medians(
 
 
 def mark_untrusted(out: dict, kept_dev: dict, headline: list[str]) -> None:
-    """Stamp a kept-but-still-deviant pass (VERDICT r11 rec #2): the
-    deviant groups land in ``accept.kept_deviations``, every query in
+    """Stamp a suspect pass (VERDICT r11 rec #2): the deviant groups
+    land in ``accept.kept_deviations`` with their ratios, every query in
     them is listed under ``untrusted_queries`` in the detail/history
     records (so per-query diff tooling never treats them as clean
     latest readings), and ``gate_deviant`` keeps the history line out
@@ -424,135 +394,6 @@ def mark_untrusted(out: dict, kept_dev: dict, headline: list[str]) -> None:
     )
 
 
-def merge_groups(
-    base: dict, retry: dict, groups: set, headline: list[str]
-) -> dict:
-    """Merge a group-scoped retry into the first pass: for each group
-    in ``groups`` the retry's per-query timings (and group total)
-    replace the first pass's; every other group keeps its measured
-    values — they passed the gate, so re-timing them would only add
-    ~8 minutes of clean-measurement churn per retry (VERDICT r12
-    rec #7). Pure so the merge arithmetic is unit-testable."""
-    merged = dict(base)
-    q = {
-        n: v
-        for n, v in base.get("queries", {}).items()
-        if group_of(n, headline) not in groups
-    }
-    q.update(
-        {
-            n: v
-            for n, v in retry.get("queries", {}).items()
-            if group_of(n, headline) in groups
-        }
-    )
-    merged["queries"] = q
-    if "value" in groups:
-        merged["value"] = retry["value"]
-    if "streaming_total" in groups:
-        merged["streaming_total"] = retry["streaming_total"]
-    for key in ("errors", "degraded_medians"):
-        kept = {
-            n: v
-            for n, v in base.get(key, {}).items()
-            if group_of(n, headline) not in groups
-        }
-        kept.update(
-            {
-                n: v
-                for n, v in retry.get(key, {}).items()
-                if group_of(n, headline) in groups
-            }
-        )
-        if kept:
-            merged[key] = kept
-        else:
-            merged.pop(key, None)
-    # first-pass probes stay authoritative for the run bracket; the
-    # retry's own mid-probes ride along for the audit trail
-    if retry.get("calib_mid_sec"):
-        merged["retry_calib_mid_sec"] = retry["calib_mid_sec"]
-    return merged
-
-
-def splice_from_history(
-    out: dict, kept_dev: dict, donor: dict, headline: list[str]
-) -> None:
-    """SPLICE fallback (VERDICT r12 rec #1): a group deviant on both
-    measurements is sustained-load damage — its per-query block is
-    replaced with the most recent in-band history pass's values so the
-    official headline always reflects an in-band reading. Clearly
-    labeled: ``accept.spliced_groups`` carries the donor's ``from_utc``
-    per group, the replaced names land in top-level ``spliced_queries``,
-    and the displaced measurements stay auditable in
-    ``replaced_measurements``. Group names with no donor value keep
-    their measured (deviant) reading and REMAIN in
-    ``untrusted_queries``; spliced names leave it (their values are
-    clean history, not untrusted measurements). The caller must have
-    stamped ``gate_deviant`` already (mark_untrusted) so the spliced
-    line — whose numbers are copies of the donor's — never feeds
-    future acceptance medians."""
-    donor_q = donor.get("queries", {})
-    # ADVICE r13 (medium): an accepted donor line can still carry
-    # outlier-stamped readings (the lone->3x stamp) — those values are
-    # known-contaminated and must NOT be spliced in as clean history;
-    # treat them as having no donor value (mirrors the filter
-    # per_query_history_medians applies)
-    donor_bad = set(donor.get("untrusted_queries") or [])
-    spliced: list[str] = []
-    leftover: list[str] = []
-    replaced: dict[str, float] = {}
-    for g in kept_dev:
-        for n in [
-            n for n in out["queries"] if group_of(n, headline) == g
-        ]:
-            dv = donor_q.get(n)
-            if n not in donor_bad and isinstance(dv, (int, float)) and dv > 0:
-                replaced[n] = out["queries"][n]
-                out["queries"][n] = dv
-                spliced.append(n)
-            else:
-                leftover.append(n)
-        # ADVICE r13 (low): a query that ERRORED in the current run but
-        # has a clean donor reading used to silently shrink the spliced
-        # group total; splice the donor value so the group total stays
-        # comparable (still labeled via spliced_queries)
-        for n, dv in donor_q.items():
-            if (
-                group_of(n, headline) == g
-                and n not in out["queries"]
-                and n not in donor_bad
-                and isinstance(dv, (int, float))
-                and dv > 0
-            ):
-                out["queries"][n] = dv
-                spliced.append(n)
-    if "value" in kept_dev:
-        out["value"] = round(
-            sum(
-                v
-                for n, v in out["queries"].items()
-                if n in set(headline)
-            ),
-            4,
-        )
-    if "streaming_total" in kept_dev:
-        out["streaming_total"] = round(
-            sum(
-                v
-                for n, v in out["queries"].items()
-                if group_of(n, headline) == "streaming_total"
-            ),
-            4,
-        )
-    out["accept"]["spliced_groups"] = {
-        g: {"from_utc": donor.get("utc")} for g in sorted(kept_dev)
-    }
-    out["spliced_queries"] = sorted(spliced)
-    out["replaced_measurements"] = replaced
-    out["untrusted_queries"] = sorted(leftover)
-
-
 def gate_deviations(ratios: dict, threshold: float = 1.25) -> dict:
     """Groups whose per-query ratio median exceeds ``threshold`` (slow
     direction only — a faster-than-history pass is a better record, not
@@ -562,8 +403,7 @@ def gate_deviations(ratios: dict, threshold: float = 1.25) -> dict:
 
 
 def worst_ratio(ratios: dict) -> float:
-    """Max group ratio median — the retry winner is the pass with the
-    SMALLER worst-group ratio."""
+    """Max group ratio median, recorded as ``accept.worst_ratio``."""
     return max(ratios.values()) if ratios else 0.0
 
 
@@ -611,8 +451,7 @@ def build_summary(
         # cold single-pass (ADVICE r9 measurement-semantics note)
         "stream_timing": "warm_median3_since_r9",
         # machine-readable acceptance-gate record (r11): status +
-        # ratios; on a retried run the losing pass stays in the history
-        # file flagged contaminated
+        # ratios; a suspect pass names its deviant groups here
         "accept": out.get("accept"),
     }
 
@@ -621,114 +460,39 @@ def run_gate(
     out: dict,
     entries: list[dict] | None,
     names: list[str],
-    remeasure,
-    recool,
-) -> tuple[dict, dict | None]:
-    """The full acceptance decision for one measured pass: compare per
-    group against history, group-scoped retry on deviation, keep the
-    better measurement per group, splice sustained-load groups from the
-    last in-band pass, and stamp per-query outliers. Pure logic over
-    injected effects (``remeasure(groups) -> measure() dict``,
-    ``recool() -> probe list``) so the exact code path the unattended
-    official close-out run takes is unit-testable end-to-end — a crash
-    here would lose the round's official artifact. Returns
-    ``(accepted_record, rejected_full_pass_or_None)``."""
+) -> dict:
+    """The acceptance decision for one measured pass, as bookkeeping:
+    compare each group against history, stamp deviant groups and
+    per-query outliers untrusted, and leave every measured number as
+    it is. Status is ``no_history``, ``ok`` or ``suspect``. Pure, so
+    the exact code path the unattended official run takes is
+    unit-testable. Stamps and returns ``out``."""
     pq_med = per_query_history_medians(entries) if entries else None
-    ratios1 = group_ratio_medians(out["queries"], pq_med, names)
-    dev1 = gate_deviations(ratios1)
-    rejected = None
+    ratios = group_ratio_medians(out["queries"], pq_med, names)
+    dev = gate_deviations(ratios)
     if not entries:
         out["accept"] = {"status": "no_history"}
-    elif not dev1:
+    else:
         out["accept"] = {
-            "status": "ok",
-            "worst_ratio": round(worst_ratio(ratios1), 3),
+            "status": "suspect" if dev else "ok",
+            "worst_ratio": round(worst_ratio(ratios), 3),
             # which groups the gate actually compared — a group with
             # fewer than min_common shared query names is SKIPPED, and
             # the record must say so rather than imply it was checked
-            "groups_compared": sorted(ratios1),
+            "groups_compared": sorted(ratios),
         }
-    else:
-        # the measured pass's per-query ratio median is >25% above
-        # history on at least one group: cool down, re-measure ONLY the
-        # deviant groups (VERDICT r12 rec #7 — a full-pass retry
-        # re-timed ~8 min of clean extensions to re-judge a 30 s
-        # headline), and keep each group's smaller-ratio measurement.
-        # The full first pass lands in the history flagged contaminated
-        # whenever any of its groups were replaced.
-        print(
-            f"acceptance gate: deviant groups {dev1} vs per-query "
-            f"history medians ({len(entries)} passes) — cooling down, "
-            f"re-measuring only {sorted(dev1)}",
-            file=sys.stderr,
-        )
-        retry_probes = recool()
-        try:
-            retry = remeasure(set(dev1))
-        except Exception as exc:  # noqa: BLE001 - salvage the first pass
-            # a dying retry must never lose the round's only measured
-            # record: keep the first pass, stamp its deviant groups
-            # untrusted, and fall through to the splice fallback
-            print(f"gate retry failed (keeping first pass): {exc!r}",
-                  file=sys.stderr)
-            retry = {"queries": {}}
-        ratios2 = group_ratio_medians(retry["queries"], pq_med, names)
-        improved = {
-            g for g in dev1
-            if ratios2.get(g, float("inf")) < ratios1[g]
-        }
-        if improved:
-            rejected = dict(out)
-            rejected["contaminated"] = True
-            rejected["accepted"] = False
-            out = merge_groups(out, retry, improved, names)
-        kept_ratios = dict(ratios1)
-        for g in improved:
-            kept_ratios[g] = ratios2[g]
-        # retry readings that LOST (first pass kept for their group)
-        # stay auditable in the detail record; winning retry groups'
-        # displaced first-pass values live in the contaminated history
-        # line written alongside
-        lost = {
-            n: v
-            for n, v in retry.get("queries", {}).items()
-            if group_of(n, names) not in improved
-        }
-        if lost:
-            out["retry_measurements"] = lost
-        kept_dev = gate_deviations(kept_ratios)
-        out["accept"] = {
-            "status": "retried",
-            "first_deviations": dev1,
-            "retried_groups": sorted(dev1),
-            "retry_ratios": ratios2,
-            "retry_cooldown_probes": retry_probes,
-            "groups_from_retry": sorted(improved),
-            "kept_worst_ratio": round(worst_ratio(kept_ratios), 3),
-            "groups_compared": sorted(kept_ratios),
-            # a group deviant on BOTH measurements → likely sustained
-            # load; the record says so instead of pretending the retry
-            # cleaned it
-            "kept_still_deviant": bool(kept_dev),
-        }
-        if kept_dev:
-            # VERDICT r11 rec #2: a kept-but-still-deviant pass must
-            # never present its deviant groups' per-query numbers as
-            # unqualified latest readings (the r11 exhibit: a 23.7 s
-            # similarity_ivfpq_recall vs a 3.4-4.9 s ten-pass band
-            # landing in BENCH_DETAIL_latest.json)
-            mark_untrusted(out, kept_dev, names)
-            # SPLICE fallback (VERDICT r12 rec #1): replace the
-            # sustained-load groups with the most recent in-band
-            # history pass's block, clearly labeled, so the official
-            # headline is never a load artifact
-            splice_from_history(out, kept_dev, entries[-1], names)
+        if dev:
+            print(
+                f"acceptance gate: suspect groups {dev} vs per-query "
+                f"history medians ({len(entries)} passes)",
+                file=sys.stderr,
+            )
+            mark_untrusted(out, dev, names)
 
     # per-query outlier stamp (ADVICE r12): a lone >3x spike inside an
     # in-band group is still flagged for per-query diff tooling
     if pq_med:
-        skip = set(out.get("spliced_queries", []))
-        outl = per_query_outliers(out["queries"], pq_med, skip=skip)
+        outl = per_query_outliers(out["queries"], pq_med)
         if outl:
             # burst co-traveler rule (VERDICT r13 rec #1): one >3x
             # spike proves a contention window was live, so the
@@ -736,10 +500,8 @@ def run_gate(
             # not regressions — stamp them too (the r13 kept pass
             # carried 15 such readings unstamped, inflating
             # extensions_total to 561 s vs the 393-489 s clean band)
-            outl = per_query_outliers(
-                out["queries"], pq_med, threshold=2.0, skip=skip
-            )
-            out.setdefault("accept", {})["n_per_query_outliers"] = len(outl)
+            outl = per_query_outliers(out["queries"], pq_med, threshold=2.0)
+            out["accept"]["n_per_query_outliers"] = len(outl)
             out["per_query_outliers"] = outl
             out["untrusted_queries"] = sorted(
                 set(out.get("untrusted_queries", [])) | set(outl)
@@ -750,10 +512,24 @@ def run_gate(
             hl = sorted(n for n in outl if n in names)
             if hl:
                 out["accept"]["headline_outliers"] = hl
-    return out, rejected
+    return out
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description="Time the engine's queries.")
+    ap.add_argument(
+        "--only",
+        nargs="+",
+        metavar="NAME",
+        help="time only these queries (median of 3 cache-isolated "
+        "passes each) and print their passes; no gate, no records",
+    )
+    args = ap.parse_args(argv)
+    queries = get_queries()
+    unknown = sorted(set(args.only or ()) - set(queries))
+    if unknown:
+        ap.error(f"unknown queries: {' '.join(unknown)}")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -768,9 +544,7 @@ def main() -> None:
     cool_tries = int(os.environ.get("SPARK_GRAFT_BENCH_COOLDOWN_TRIES", "5"))
     cool_sleep = float(os.environ.get("SPARK_GRAFT_BENCH_COOLDOWN_SLEEP", "20"))
     cool_probes = cooldown(cool_max, cool_tries, cool_sleep)
-    calib_start = cool_probes[-1]
     spark = get_spark(app_name="bench")
-    queries = get_queries()
     names = [n for n in HEADLINE if n in queries]
     # extension operators registered beyond the reference surface.
     # Excluded from the timed pass:
@@ -880,39 +654,31 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 - warmup is best-effort
         print(f"warmup failed: {exc!r}", file=sys.stderr)
 
-    out = measure(spark, queries, names, extras, streaming, sf_dir)
+    if args.only:
+        out = measure(spark, queries, [], args.only, [], sf_dir,
+                      heavy=frozenset(args.only))
+    else:
+        out = measure(spark, queries, names, extras, streaming, sf_dir)
+    out["calib_cooldown_sec"] = cool_probes
+    out["calib_start_sec"] = cool_probes[-1]
+    out["calib_end_sec"] = load_calibration()
+    out["sf"] = sf
+    out["cpus"] = cpus
+    if args.only:
+        # a subset pass is not comparable with a full one: it is never
+        # gated and never enters the detail or history records
+        for k in ("metric", "value", "unit", "streaming_total"):
+            del out[k]
+        print(json.dumps(out))
+        return
 
     # ── acceptance gate (VERDICT r10 rec #1; r12: per-query ratio
-    # medians over the history intersection, ADVICE r11; r13:
-    # group-scoped retry + splice fallback + per-query outlier stamp,
-    # VERDICT r12 rec #1/#7 + ADVICE r12) ──────────────────────────────
+    # medians over the history intersection, ADVICE r11; flag-only) ────
     here = os.path.dirname(os.path.abspath(__file__))
     history_path = os.path.join(here, "BENCH_DETAIL_history.jsonl")
     entries = comparable_history_entries(history_path, sf, cpus=cpus)
-    out, rejected = run_gate(
-        out,
-        entries,
-        names,
-        remeasure=lambda gs: measure(
-            spark, queries, names, extras, streaming, sf_dir,
-            only_groups=gs,
-        ),
-        # the retry cooldown gets a 3x budget vs startup (worst ~5 min
-        # at defaults): a deviation means a contention window is LIVE
-        # right now, and waiting it out is cheaper than falling through
-        # to the history splice
-        recool=lambda: cooldown(
-            cool_max, 2 * cool_tries, 1.5 * cool_sleep
-        ),
-    )
-
-    out["calib_cooldown_sec"] = cool_probes
-    calib_end = load_calibration()
-    out["calib_start_sec"] = calib_start
-    out["calib_end_sec"] = calib_end
-    out["sf"] = sf
-    out["cpus"] = cpus
-    write_records(out, rejected, names, extras, here, history_path)
+    out = run_gate(out, entries, names)
+    write_records(out, names, extras, here, history_path)
 
 
 def measure(
@@ -922,16 +688,15 @@ def measure(
     extras: list[str],
     streaming: list[str],
     sf_dir: str,
-    only_groups: set | None = None,
+    heavy: frozenset[str] = HEAVY_EXTENSIONS,
 ) -> dict:
     """One measured pass over the three query groups, with a mid-run
-    calibration probe after each measured group but the last
+    calibration probe after each non-empty group but the last
     (``calib_mid_sec``) so host contention INSIDE the ~10-minute run is
-    sampled, not just bracketed (VERDICT r10 rec #1). ``only_groups``
-    (gate-group names, see ``group_of``) restricts the pass to the
-    named groups — the group-scoped acceptance retry (VERDICT r12
-    rec #7) re-times just the deviant groups instead of doubling the
-    whole ~10-minute run."""
+    sampled, not just bracketed (VERDICT r10 rec #1). Extension queries
+    in ``heavy`` are timed as the median of three cache-isolated
+    passes, every pass kept under ``heavy_passes``; ``--only`` passes
+    its names here as the extension group."""
     per_query: dict[str, float] = {}
     errors: dict[str, str] = {}
     degraded: dict[str, str] = {}  # median-of-3 queries that fell back
@@ -944,11 +709,7 @@ def measure(
         ("extensions_total", extras),
         ("streaming_total", streaming),
     ]
-    measured = [
-        (g, qs)
-        for g, qs in ordered
-        if only_groups is None or g in only_groups
-    ]
+    measured = [(g, qs) for g, qs in ordered if qs]
     for gi, (_gname, group) in enumerate(measured):
         for name in group:
             t0 = time.perf_counter()
@@ -997,7 +758,7 @@ def measure(
                         name=name,
                     )
                     streaming_total += dt
-                elif name in HEAVY_EXTENSIONS:
+                elif name in heavy:
                     # heaviest extensions: median-of-3 since r15
                     # (VERDICT r14 rec #8) with per-pass cache
                     # isolation and per-pass readings recorded — see
@@ -1063,14 +824,12 @@ def measure(
 
 def write_records(
     out: dict,
-    rejected: dict | None,
     names: list[str],
     extras: list[str],
     here: str,
     history_path: str,
 ) -> None:
-    """Durable + stdout records for the accepted pass (and the rejected
-    one, if the acceptance gate re-ran).
+    """Durable + stdout records for the measured pass.
 
     The driver keeps only the LAST ~2000 bytes of stdout; round 3's
     single big JSON line lost its head (the headline "value") to that
@@ -1081,11 +840,11 @@ def write_records(
     The detail file lives IN THE REPO (next to bench.py) so the
     end-of-round snapshot commits it — /tmp copies died with the
     session, which made the r9 +20% extensions_total drift
-    unattributable (VERDICT r9 rec #2). Every pass — including a
-    gate-rejected one, flagged ``contaminated`` — appends one
-    timestamped line to BENCH_DETAIL_history.jsonl so successive
-    in-round runs never overwrite each other and the gate's future
-    medians skip known-bad passes."""
+    unattributable (VERDICT r9 rec #2). Every full pass — a suspect one
+    too, flagged ``gate_deviant`` — appends one timestamped line to
+    BENCH_DETAIL_history.jsonl so successive in-round runs never
+    overwrite each other and the gate's future medians skip known-bad
+    passes."""
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
         os.path.join(here, "BENCH_DETAIL_latest.json"),
@@ -1098,13 +857,6 @@ def write_records(
             json.dump(stamped, f, indent=1, sort_keys=True)
             f.write("\n")
         with open(history_path, "a") as f:
-            if rejected is not None:
-                loser = dict(rejected)
-                loser["utc"] = utc
-                # carry sf + cpus so comparability filtering still works
-                loser.setdefault("sf", out.get("sf"))
-                loser.setdefault("cpus", out.get("cpus"))
-                f.write(json.dumps(loser, sort_keys=True) + "\n")
             f.write(json.dumps(stamped, sort_keys=True) + "\n")
     except OSError as exc:
         print(f"detail write failed: {exc!r}", file=sys.stderr)

@@ -65,22 +65,7 @@ def get_spark(
         # reader rejects; read as long and normalize in catalog.base()
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # whole-stage-codegen fallback threshold: back to Spark's
-        # default (65535) in r15. The r14 override to 8000 (HotSpot's
-        # DontCompileHugeMethods limit) was re-measured with an
-        # interleaved quiet-window A/B (VERDICT r14 rec #1) and LOST:
-        # 65535 was equal-or-faster on every probe — including
-        # dedup_lsh_band_tradeoff, the one suite query whose generated
-        # method actually exceeds 8000 bytecodes (13,609 measured via
-        # CodegenMetrics; semdedup_cluster_pairs ran ~25% faster under
-        # 65535 across all four interleaved batches). The r14 3.2→2.1 s
-        # reading did not reproduce; every other suite stage's methods
-        # are already split under 8000 by methodSplitThreshold=1024.
-        # Env-overridable for future A/Bs.
-        .config(
-            "spark.sql.codegen.hugeMethodLimit",
-            os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "65535"),
-        )
+        # hugeMethodLimit: Spark's default; an 8000 override lost the r15 A/B
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
