@@ -31,15 +31,6 @@ vs five same-day calibrated passes with zero code delta — and the
 start/end probes (in band) bracketed but never SAMPLED the ~10-minute
 window. Defenses, in run order:
 
-0. COOLDOWN gate (r13, VERDICT r12 rec #1): two consecutive official
-   runs landed inside co-tenant load windows because the close-out
-   bench starts at whatever load the round end hits. Before the
-   measured pass the CPU probe must read under
-   ``SPARK_GRAFT_BENCH_CALIB_MAX`` (default 0.85 s; idle band is
-   ~0.5-0.7 s) — otherwise sleep and re-probe, bounded at
-   ``SPARK_GRAFT_BENCH_COOLDOWN_TRIES`` attempts so the driver is
-   never blocked indefinitely. All probes are recorded
-   (``calib_cooldown_sec``), including a timed-out wait.
 1. MID-RUN probes: the CPU calibration probe also runs between query
    groups (after headline, after extensions), recorded as
    ``calib_mid_sec`` — a contention window inside the run is visible.
@@ -64,7 +55,7 @@ window. Defenses, in run order:
    measurement.
 
 ``python bench.py --only NAME ...`` times just the named queries after
-the same cooldown and warm-up, each as the median of three cache-
+the same warm-up, each as the median of three cache-
 isolated passes (the ``HEAVY_EXTENSIONS`` rule), and prints one JSON
 line with the passes and the calibration probes. A subset pass is
 never gated and never written to the detail or history records.
@@ -143,33 +134,6 @@ def load_calibration(iters: int = 1_500_000) -> float:
     for _ in range(iters):
         h = hashlib.sha256(h).digest()
     return round(time.perf_counter() - t0, 4)
-
-
-def cooldown(
-    max_calib: float,
-    attempts: int,
-    sleep_s: float,
-    probe=load_calibration,
-    sleep=time.sleep,
-) -> list[float]:
-    """Load-probe cooldown gate (VERDICT r12 rec #1): probe host load
-    and, while the probe reads above ``max_calib``, sleep and re-probe
-    up to ``attempts`` extra times. Returns every probe reading (the
-    last one is the reading the run starts under). Bounded so a
-    sustained-load box delays the official run by at most
-    ``attempts * sleep_s`` instead of blocking the driver; a timed-out
-    wait is visible as a final probe still above the threshold."""
-    probes = [probe()]
-    while probes[-1] > max_calib and len(probes) <= attempts:
-        print(
-            f"cooldown: calibration probe {probes[-1]:.3f}s > "
-            f"{max_calib}s — sleeping {sleep_s:.0f}s "
-            f"({len(probes)}/{attempts})",
-            file=sys.stderr,
-        )
-        sleep(sleep_s)
-        probes.append(probe())
-    return [round(p, 4) for p in probes]
 
 
 def median_of_completed(
@@ -435,10 +399,6 @@ def build_summary(
         # median-of-3 queries that fell back to fewer passes (per-query
         # reasons in the detail file's degraded_medians map)
         "n_degraded_medians": len(out.get("degraded_medians", {})),
-        # cooldown-gate probe trail (VERDICT r12 rec #1): the run
-        # started only after the last probe — or after the bounded wait
-        # timed out, visible as a final probe above the threshold
-        "calib_cooldown_sec": out.get("calib_cooldown_sec"),
         "calib_start_sec": out.get("calib_start_sec"),
         # mid-run probes (after headline / after extensions): a
         # contention window INSIDE the run is visible, not just at the
@@ -537,13 +497,7 @@ def main(argv: list[str] | None = None) -> None:
     # records carry it and the gate only compares same-cpus passes
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    # cooldown gate (VERDICT r12 rec #1): never START an official run
-    # inside a known load window. SPARK_GRAFT_BENCH_COOLDOWN_TRIES=0
-    # disables the wait (single probe, start immediately).
-    cool_max = float(os.environ.get("SPARK_GRAFT_BENCH_CALIB_MAX", "0.85"))
-    cool_tries = int(os.environ.get("SPARK_GRAFT_BENCH_COOLDOWN_TRIES", "5"))
-    cool_sleep = float(os.environ.get("SPARK_GRAFT_BENCH_COOLDOWN_SLEEP", "20"))
-    cool_probes = cooldown(cool_max, cool_tries, cool_sleep)
+    calib_start = load_calibration()
     spark = get_spark(app_name="bench")
     names = [n for n in HEADLINE if n in queries]
     # extension operators registered beyond the reference surface.
@@ -659,8 +613,7 @@ def main(argv: list[str] | None = None) -> None:
                       heavy=frozenset(args.only))
     else:
         out = measure(spark, queries, names, extras, streaming, sf_dir)
-    out["calib_cooldown_sec"] = cool_probes
-    out["calib_start_sec"] = cool_probes[-1]
+    out["calib_start_sec"] = calib_start
     out["calib_end_sec"] = load_calibration()
     out["sf"] = sf
     out["cpus"] = cpus

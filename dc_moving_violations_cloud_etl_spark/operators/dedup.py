@@ -26,13 +26,12 @@ only the (tiny) within-bucket pair set.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
 from .text import fingerprint, normalized, shingles, shingles_raw, text_hash
+from .width import spread
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -55,71 +54,16 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 ]
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the session's default parallelism
-    when the source arrives under-partitioned (the fixture corpus is one
-    small parquet file → one input split → one task). On a real cluster
-    a 100 TB corpus already arrives in thousands of splits and this is a
-    no-op; locally it's the difference between 1 and 32 cores on the
-    expression-heavy dedup pipelines.
-
-    The split-count probe uses the scan's file listing (``inputFiles`` +
-    ``maxPartitionBytes``), NOT ``df.rdd`` — the RDD conversion would pin
-    a plan node into every dedup DAG just to ask a number.
-    """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df.repartition(target)
-    if not files:
-        return df
-    try:
-        max_bytes = _bytes_conf(
-            spark.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-    except Exception:
-        max_bytes = 128 * 1024 * 1024
-    splits = 0
-    for uri in files:
-        p = uri[7:] if uri.startswith("file://") else uri
-        try:
-            size = os.path.getsize(p)
-        except OSError:
-            # non-local / unstatable source: assume well-partitioned
-            return df
-        splits += max(1, -(-size // max_bytes))
-    if splits < target:
-        return df.repartition(target)
-    return df
-
-
-def _shuffle_width(spark) -> int:
-    """The configured ``spark.sql.shuffle.partitions``; the default
-    parallelism when the value is not a number (platforms that accept
-    ``auto``)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except ValueError:
-        return spark.sparkContext.defaultParallelism
-
-
-def _bytes_conf(v: str) -> int:
-    """Parse a Spark byte-size conf value ('134217728', '128m', '1g')."""
-    v = v.strip().lower().removesuffix("b")
-    mult = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}.get(v[-1:], 1)
-    return int(v[:-1] if mult > 1 else v) * mult
-
-
 def norm_docs(documents: DataFrame) -> DataFrame:
     """documents + normalized text/shingle columns (the shared prefix of
     every dedup pipeline)."""
     norm = normalized(F.col("text"))
     # null guard on the RAW column: pushes to the scan as a plain
     # isnotnull(text) parquet filter (a guard on `norm` would drag the
-    # whole regexp/lower chain into the scan filter)
-    return _fan_out(documents.where(F.col("text").isNotNull())).select(
+    # whole regexp/lower chain into the scan filter). The corpus arrives
+    # as one small parquet file, one input split: spread it so the
+    # expression-heavy normalize/shingle chain uses every core.
+    return spread(documents.where(F.col("text").isNotNull())).select(
         "doc_id",
         "lang",
         norm.alias("norm"),
@@ -233,12 +177,18 @@ def minhash_signatures(documents: DataFrame) -> DataFrame:
     per candidate pair, which is exactly the blowup that makes the naive
     expression shape O(pairs × shingles) instead of O(corpus shingles).
     Map-side combine keeps the shuffle at 16 hex strings per doc.
+
+    The result is not spread by ``doc_id`` here, but by the consumers
+    that persist it and verify pairs over it (assign, incremental,
+    recall, band-tradeoff: each measured 20-30% faster in r15). The
+    band-star edge path (``dedup_components``) measured SLOWER with
+    the extra exchange, because its band window re-shuffles at once.
     """
     # norm_docs already null-guards on raw text (cheap scan filter); the
     # greatest(...,1) bound in shingles() means sh is never empty, so no
     # size(sh) filter is needed — one on the computed column would be
     # pushed into the (single-split) file scan and evaluate the whole
-    # shingle transform serially before the fan-out repartition.
+    # shingle transform serially before norm_docs' spread.
     d = norm_docs(documents)
     # explode the RAW shingle runs — min() is multiset-insensitive, and
     # exploding the distinct array would re-run its O(len²) dedup per
@@ -289,22 +239,6 @@ def minhash_signatures(documents: DataFrame) -> DataFrame:
         .withColumn("bands", bands)
         .drop(*[f"_mh{s}" for s in range(N_MINHASH)])
     )
-
-
-def spread_by_doc(df: DataFrame) -> DataFrame:
-    """Explicit doc_id re-spread for persisted signature tables (r15,
-    guide §2.5): compressed shuffle stats undersell the shingle /
-    signature arrays ~20x, so AQE coalesces a persisted signature
-    build to 1-3 partitions at bench scale — every downstream band
-    explode, posting-list truth join and per-pair verify then runs
-    1-3-wide regardless of core count. Width = the configured shuffle
-    width (the partitioning the doc_id join already has pre-AQE,
-    cluster-tunable). Applied per CONSUMER, not in minhash_signatures
-    itself: the band-star edge path (dedup_components) measured SLOWER
-    with the extra exchange (its band window re-shuffles immediately),
-    while the verify-heavy consumers (assign, incremental, recall,
-    band-tradeoff) each measured 20-30% faster."""
-    return df.repartition(_shuffle_width(df.sparkSession), "doc_id")
 
 
 def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
@@ -574,9 +508,14 @@ def minhash_dedup_assign(documents: DataFrame) -> DataFrame:
     # pipeline (Spark shares no subtrees across join branches); at
     # 100 TB this intermediate is exactly the signature table a web-scale
     # dedup writes to storage between the sketch and cluster passes.
+    # Spread by doc_id (r15): compressed shuffle stats undersell the
+    # shingle/signature arrays ~20x, so AQE coalesced the persisted
+    # signature build to 1-3 partitions at bench scale, and every band
+    # explode, truth join and per-pair verify downstream ran 1-3 wide.
     per_doc = persist_tracked(
-        spread_by_doc(
-            minhash_signatures(documents).select("doc_id", "sh", "bands")
+        spread(
+            minhash_signatures(documents).select("doc_id", "sh", "bands"),
+            "doc_id",
         )
     )
     return minhash_assign_from_signatures(per_doc)

@@ -35,11 +35,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
-from .dedup import _fan_out, _shuffle_width
+from .width import spread
 
 TOP_K = 5
 QUERY_MOD = 100  # query set = vec_id % 100 == 0
 N_PLANES = 8  # hyperplanes = embeddings of vec_id 1..8
+
+# The embeddings table arrives as one small parquet file, one input
+# split: every builder spreads it before its per-vector arithmetic.
 
 
 def _as_double(c: F.Column) -> F.Column:
@@ -57,7 +60,7 @@ def _dot(a: F.Column, b: F.Column) -> F.Column:
 
 def with_norm(embeddings: DataFrame) -> DataFrame:
     e = _as_double(F.col("embedding"))
-    return _fan_out(embeddings).select(
+    return spread(embeddings).select(
         "vec_id",
         "label",
         e.alias("e"),
@@ -109,7 +112,7 @@ def centroids(embeddings: DataFrame) -> DataFrame:
     engine (Spark ASC = NULLS FIRST vs DuckDB NULLS LAST) and its
     self-centroid swallowed the vector into an unjoinable NULL cell
     (r11 dirty-fixture catch)."""
-    ex = _fan_out(embeddings.where(F.col("label").isNotNull())).select(
+    ex = spread(embeddings.where(F.col("label").isNotNull())).select(
         "label", F.posexplode(_as_double(F.col("embedding"))).alias("pos", "v")
     )
     per_dim = ex.groupBy("label", "pos").agg(
@@ -327,7 +330,7 @@ def pq_codebooks(embeddings: DataFrame) -> DataFrame:
     NULL labels excluded, same rule as ``centroids()``: unlabeled
     vectors are encoded against the trained codebook, never spawn a
     phantom codeword (r11)."""
-    ex = _fan_out(embeddings.where(F.col("label").isNotNull())).select(
+    ex = spread(embeddings.where(F.col("label").isNotNull())).select(
         "label",
         F.posexplode(_as_double(F.col("embedding"))).alias("pos", "v"),
     )
@@ -364,7 +367,7 @@ def pq_encode(embeddings: DataFrame) -> DataFrame:
     argmin window; the corpus is never shuffled.
     """
     cb = pq_codebooks(embeddings)
-    subs = _fan_out(embeddings).select(
+    subs = spread(embeddings).select(
         "vec_id",
         _as_double(F.col("embedding")).alias("e"),
     ).select(
@@ -402,17 +405,15 @@ def pq_encode(embeddings: DataFrame) -> DataFrame:
     # int table to ONE cached partition at bench scale (measured:
     # codes.rdd.getNumPartitions() == 1, the whole ADC probe ran
     # serial; repartitioned A/B 2.2 s -> 1.0 s on the per-pair agg).
-    # Width = the session's configured shuffle width (the width the
-    # window already had pre-AQE, cluster-tunable), keyed by vec_id so
-    # a vector's PQ_M codes co-locate and the downstream (query, vec)
-    # partial agg combines map-side. Cheap at any scale: the code
-    # table is the ~32x-compressed index — one extra shuffle of it is
-    # the smallest shuffle in the family.
-    return (
+    # Keyed by vec_id so a vector's PQ_M codes co-locate and the
+    # downstream (query, vec) partial agg combines map-side. Cheap at
+    # any scale: the code table is the ~32x-compressed index — one
+    # extra shuffle of it is the smallest shuffle in the family.
+    return spread(
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select("vec_id", "sub", "code")
-        .repartition(_shuffle_width(embeddings.sparkSession), "vec_id")
+        .select("vec_id", "sub", "code"),
+        "vec_id",
     )
 
 
@@ -628,7 +629,7 @@ def cosine_topk_truncated(
     truncation — exactly the number a serving team needs before
     flipping this switch. Same broadcast-query brute-force shape as the
     full-dimension baseline, 4x less arithmetic and scan width."""
-    corpus = _fan_out(embeddings).select(
+    corpus = spread(embeddings).select(
         "vec_id",
         F.slice(_as_double(F.col("embedding")), 1, dims).alias("e"),
     ).select("vec_id", "e", F.sqrt(_dot(F.col("e"), F.col("e"))).alias("norm"))
@@ -735,7 +736,7 @@ def int8_codes(embeddings: DataFrame) -> DataFrame:
     EXACT integers, so ranking is deterministic across engines."""
     e = _as_double(F.col("embedding"))
     amax = F.array_max(F.transform(e, F.abs))
-    return _fan_out(embeddings).select(
+    return spread(embeddings).select(
         "vec_id",
         e.alias("e"),
         amax.alias("amax"),

@@ -23,6 +23,7 @@ from ..operators.text import (
     text_hash,
     tokens,
 )
+from ..operators.width import spread
 from .extensions import _DOCS_CTE, _docs, _emb
 from .registry import QuerySpec, register
 
@@ -589,9 +590,9 @@ def _decontaminate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "bench_doc_id",
         )
-        # size-ratio prefilter (r15, guide §1.2): J(a,b) ≤ min/max for
-        # sets, so a pair with 2·min(|a|,|b|) < max(|a|,|b|) can never
-        # reach the 0.5 threshold — drop it BEFORE the per-pair
+        # size-ratio prefilter (r15, guide §1.2): drop the pairs whose
+        # set sizes alone rule out the threshold (bound in
+        # operators/dedup.py::_size_ratio_ok) BEFORE the per-pair
         # hash-set intersect (the query's dominant cost: ~59k candidate
         # pairs × ~150-string set builds at sf0.1). Exact: every
         # dropped pair fails the jaccard >= threshold filter below.
@@ -600,14 +601,9 @@ def _decontaminate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # guide §2.5): the candidate join's shuffle stats undersell the
         # shingle-array payload ~20x, so AQE coalesced the verify input
         # to 2 partitions at sf0.1 (measured via spark_partition_id) —
-        # 30 of 32 cores idle in the dominant stage. Scale-adaptive
-        # (defaultParallelism), same posture as operators/dedup._fan_out;
-        # the re-shuffled rows are banded candidates only.
-        .repartition(
-            spark.sparkContext.defaultParallelism,
-            "text_hash",
-            "bench_doc_id",
-        )
+        # 30 of 32 cores idle in the dominant stage. The re-shuffled
+        # rows are banded candidates only.
+        .transform(spread, "text_hash", "bench_doc_id")
         .select(
             "text_hash",
             _dedup._jaccard(F.col("sh"), F.col("sh_b")).alias("jaccard"),

@@ -31,6 +31,7 @@ from ..operators.text import (
     token_stats,
     tokens,
 )
+from ..operators.width import spread
 from .registry import QuerySpec, register
 
 # ---------------------------------------------------------------------------
@@ -68,9 +69,8 @@ docs_n AS (
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus arrives as one small parquet file → one input split;
-    # fan out to session parallelism so the expression-heavy text/dedup
-    # pipelines use every core (no-op when the source is already split)
-    return dedup._fan_out(catalog.base(spark, sf_dir, "documents"))
+    # spread it so the expression-heavy text/dedup pipelines use every core
+    return spread(catalog.base(spark, sf_dir, "documents"))
 
 
 # declared embedding dimensionality (fixture contract; the PCA Gram
@@ -1699,11 +1699,13 @@ def _incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.where(F.col("doc_id") % 10 != 0)
     delta = docs.where(F.col("doc_id") % 10 == 0)
     sig_cols = ["doc_id", "sh", "bands"]
+    # spread by doc_id: see minhash_dedup_assign
     merged = caching.persist_tracked(
-        dedup.spread_by_doc(
+        spread(
             dedup.minhash_signatures(base)
             .select(*sig_cols)
-            .unionByName(dedup.minhash_signatures(delta).select(*sig_cols))
+            .unionByName(dedup.minhash_signatures(delta).select(*sig_cols)),
+            "doc_id",
         )
     )
     return dedup.minhash_assign_from_signatures(merged)
@@ -1895,11 +1897,13 @@ def _minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-collision pairs touching the query set, BEFORE Jaccard
     verification (post-verify pairs equal truth-intersect-candidates by
     construction, so verifying first would make recall trivially 1)."""
+    # spread by doc_id: see minhash_dedup_assign
     per_doc = dedup.persist_tracked(
-        dedup.spread_by_doc(
+        spread(
             dedup.minhash_signatures(_docs(spark, sf_dir)).select(
                 "doc_id", "sh", "bands"
-            )
+            ),
+            "doc_id",
         )
     )
     qset = per_doc.where(F.col("doc_id") % _DEDUP_QUERY_MOD == 0).select(
@@ -2064,11 +2068,13 @@ def _lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     four rows; the fused stream computes both counts from one
     left-join against the persisted ground truth. Ground truth is
     computed once. Output is 4 rows."""
+    # spread by doc_id: see minhash_dedup_assign
     per_doc = dedup.persist_tracked(
-        dedup.spread_by_doc(
+        spread(
             dedup.minhash_signatures(_docs(spark, sf_dir)).select(
                 "doc_id", "sh", "mh"
-            )
+            ),
+            "doc_id",
         )
     )
     qset = per_doc.where(F.col("doc_id") % _DEDUP_QUERY_MOD == 0).select(

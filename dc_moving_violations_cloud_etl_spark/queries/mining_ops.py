@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 from .. import caching, catalog
 from ..expressions import wide_product
 from ..operators.text import normalized
+from ..operators.width import parallelism, spread
 from .registry import QuerySpec, register
 
 
@@ -1554,22 +1555,21 @@ def _semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join's required distribution (no extra exchange), and re-shuffles
     # only the n + n·n_salt membership rows — never the O(pairs)
     # scored stream.
-    par = spark.sparkContext.defaultParallelism
-    n_salt = max(1, -(-par // _KM_K))
-    a = (
+    n_salt = max(1, -(-parallelism(spark) // _KM_K))
+    a = spread(
         memb.withColumn(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        .repartition(par, "cluster", "_salt")
-        .alias("a")
-    )
-    b = (
+        ),
+        "cluster",
+        "_salt",
+    ).alias("a")
+    b = spread(
         memb.withColumn(
             "_salt", F.pmod(F.col("vec_id"), F.lit(n_salt)).cast("int")
-        )
-        .repartition(par, "cluster", "_salt")
-        .alias("b")
-    )
+        ),
+        "cluster",
+        "_salt",
+    ).alias("b")
     pairs = (
         a.join(
             b,

@@ -229,37 +229,6 @@ def test_gate_deviations_slow_direction_only():
     assert worst_ratio({}) == 0.0
 
 
-def test_cooldown_waits_until_under_threshold_and_is_bounded():
-    """VERDICT r12 rec #1: the official run must not START inside a
-    load window — probe, sleep, re-probe, but BOUNDED so a sustained-
-    load box never blocks the driver."""
-    from bench import cooldown
-
-    slept = []
-    # load subsides on the third probe
-    readings = iter([1.4, 1.1, 0.62])
-    probes = cooldown(
-        0.85, attempts=5, sleep_s=20,
-        probe=lambda: next(readings), sleep=slept.append,
-    )
-    assert probes == [1.4, 1.1, 0.62] and slept == [20, 20]
-
-    # sustained load: exactly `attempts` sleeps, then start anyway —
-    # the final probe above threshold is the visible timeout record
-    probes = cooldown(
-        0.85, attempts=3, sleep_s=5,
-        probe=lambda: 2.0, sleep=slept.append,
-    )
-    assert probes == [2.0] * 4 and slept == [20, 20, 5, 5, 5]
-
-    # idle box: single probe, zero sleeps
-    assert cooldown(
-        0.85, attempts=5, sleep_s=20,
-        probe=lambda: 0.55, sleep=lambda s: (_ for _ in ()).throw(
-            AssertionError("must not sleep")),
-    ) == [0.55]
-
-
 def test_per_query_history_medians_min_appearances():
     """ADVICE r12: a name seen in only ONE comparable pass must not
     contribute a 1-sample 'median' to the ratio pool."""
@@ -427,7 +396,7 @@ def test_only_rejects_unknown_names_before_the_session(monkeypatch):
     def must_not_run(*_a, **_k):
         raise AssertionError("must not start before names are checked")
 
-    monkeypatch.setattr(bench, "cooldown", must_not_run)
+    monkeypatch.setattr(bench, "load_calibration", must_not_run)
     monkeypatch.setattr(bench, "get_spark", must_not_run)
     with pytest.raises(SystemExit) as exc:
         bench.main(["--only", "qb_total_tickets_since", "no_such_query"])

@@ -3,27 +3,29 @@
 - the size-ratio prefilter (operators/dedup.py::_size_ratio_ok) may only
   skip pairs the ``jaccard >= threshold`` filter would drop anyway, for
   any threshold in (0, 1] — not just the module's 0.5;
-- the explicit repartition widths read ``spark.sql.shuffle.partitions``
-  without crashing on a non-numeric value such as ``auto``.
+- every explicit repartition takes its width from one policy
+  (operators/width.py): the default parallelism, whatever
+  ``spark.sql.shuffle.partitions`` says, ``auto`` included.
 """
 
 from __future__ import annotations
 
 from fractions import Fraction
+from pathlib import Path
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.conf import RuntimeConfig
 
+import dc_moving_violations_cloud_etl_spark as pkg
 from dc_moving_violations_cloud_etl_spark import catalog
 from dc_moving_violations_cloud_etl_spark.operators import similarity
 from dc_moving_violations_cloud_etl_spark.operators.dedup import (
     _jaccard,
-    _shuffle_width,
     _size_ratio_ok,
-    spread_by_doc,
 )
+from dc_moving_violations_cloud_etl_spark.operators.width import spread
 
 SETS = st.sets(st.integers(min_value=0, max_value=11), min_size=1, max_size=12)
 
@@ -79,17 +81,27 @@ def _conf_auto(monkeypatch):
     monkeypatch.setattr(RuntimeConfig, "get", get)
 
 
-def test_shuffle_width_reads_the_conf(spark):
-    assert _shuffle_width(spark) == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-
-
-def test_shuffle_width_falls_back_on_auto(spark, sf_dir, monkeypatch):
-    _conf_auto(monkeypatch)
+def test_spread_width_is_the_default_parallelism(spark, sf_dir, monkeypatch):
     par = spark.sparkContext.defaultParallelism
-    assert _shuffle_width(spark) == par
-    docs = spark.range(20).withColumnRenamed("id", "doc_id")
-    assert spread_by_doc(docs).rdd.getNumPartitions() == par
+    df = spark.range(20).withColumnRenamed("id", "k")
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for width in ("1", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+            assert spread(df, "k").rdd.getNumPartitions() == par, width
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    _conf_auto(monkeypatch)
+    assert spread(df, "k").rdd.getNumPartitions() == par
     codes = similarity.pq_encode(catalog.base(spark, sf_dir, "embeddings"))
     assert codes.count() > 0
+
+
+def test_default_parallelism_is_read_only_by_the_width_policy():
+    root = Path(pkg.__file__).parent
+    readers = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "defaultParallelism" in p.read_text()
+    )
+    assert readers == ["operators/width.py"]

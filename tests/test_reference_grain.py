@@ -5,7 +5,10 @@ runs on one partition (``catalog.dimension_sized``), so the plans need no
 range-sampling job, no second shuffle and no weather broadcast. These
 tests pin the resulting job budget, and check that the one-partition
 steps and the ``shuffle_hash`` weather join stay exact when the shuffle
-width or AQE changes (ROADMAP Direction 4, first slice).
+width or AQE changes (ROADMAP Direction 4, first slice). The same
+variants cover one query per explicit spread of the width policy
+(operators/width.py): the doc_id spread, the PQ code spread, the
+decontam verify spread and semdedup's salted self-join.
 """
 
 from __future__ import annotations
@@ -35,6 +38,12 @@ JOB_BUDGET = {
     "v2_weather_verification": 1,
 }
 REFERENCE = sorted(JOB_BUDGET)
+SPREAD = [
+    "dedup_minhash_assign",
+    "similarity_pq_adc_topk",
+    "curation_decontaminate_neardup",
+    "semdedup_cluster_pairs",
+]
 
 
 def test_reference_budget_covers_the_tagged_surface():
@@ -68,7 +77,7 @@ def test_reference_queries_stay_in_job_budget(spark, sf_dir):
     assert not ranged, f"range exchange in: {ranged}"
 
 
-# shuffle width and AQE must not change any reference result
+# shuffle width and AQE must not change any reference or spread result
 VARIANTS = {
     "shuffle_partitions_1": {"spark.sql.shuffle.partitions": "1"},
     "shuffle_partitions_7": {"spark.sql.shuffle.partitions": "7"},
@@ -93,7 +102,7 @@ def variant(request, spark):
             spark.conf.set(k, v)
 
 
-@pytest.mark.parametrize("name", REFERENCE)
+@pytest.mark.parametrize("name", REFERENCE + SPREAD)
 def test_reference_parity_is_partition_invariant(variant, spark, ddb, sf_dir, name):
     spec = QUERIES[name]
     assert_df_matches_oracle(
