@@ -81,7 +81,8 @@ def _conf_auto(monkeypatch):
     monkeypatch.setattr(RuntimeConfig, "get", get)
 
 
-def test_spread_width_is_the_default_parallelism(spark, sf_dir, monkeypatch):
+def test_shuffle_width_reads_the_conf(spark):
+    # the spread width ignores whatever shuffle.partitions says
     par = spark.sparkContext.defaultParallelism
     df = spark.range(20).withColumnRenamed("id", "k")
     saved = spark.conf.get("spark.sql.shuffle.partitions")
@@ -91,8 +92,13 @@ def test_spread_width_is_the_default_parallelism(spark, sf_dir, monkeypatch):
             assert spread(df, "k").rdd.getNumPartitions() == par, width
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def test_shuffle_width_falls_back_on_auto(spark, sf_dir, monkeypatch):
     _conf_auto(monkeypatch)
-    assert spread(df, "k").rdd.getNumPartitions() == par
+    par = spark.sparkContext.defaultParallelism
+    docs = spark.range(20).withColumnRenamed("id", "doc_id")
+    assert spread(docs, "doc_id").rdd.getNumPartitions() == par
     codes = similarity.pq_encode(catalog.base(spark, sf_dir, "embeddings"))
     assert codes.count() > 0
 
