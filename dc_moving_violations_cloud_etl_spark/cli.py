@@ -27,6 +27,11 @@ rewrites existing files, so it is replay-safe exactly like the
 reference's ``INSERT IGNORE`` idempotency contract
 (DEPLOYMENT.md:244-250). Files accumulate at one per touched month per
 day; ``history-load`` rewrites the table and is the compaction step.
+Like the reference's primary-key index probe, a day's cost follows its
+batch, not the table: the insert-if-absent anti-join reads only the
+months the batch can touch, and a warm day runs 9 Spark jobs. A missing
+table is a cold start; a table that exists but cannot be read is an
+error, never an empty table.
 """
 
 from __future__ import annotations
@@ -74,47 +79,76 @@ def cmd_history_load(args) -> int:
     return 0
 
 
+def _read_table(spark: SparkSession, path: str, schema) -> DataFrame | None:
+    """A warehouse table read with its known schema, so the read runs no
+    schema-inference job; None when the table does not exist yet (the
+    cold start). Any other read error raises: an unreadable table that
+    does exist, treated as empty, would re-append every source row."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
 def cmd_daily_load(args) -> int:
     """Incremental load: watermark resume → bounded source scan →
     rows absent from the table → append them, one file per touched
     month (reference etl/daily_load/violation_etl_daily.py
     lambda_handler's INSERT IGNORE). Existing files are never rewritten.
-    Replay-safe: re-running inserts nothing."""
+    Replay-safe: re-running inserts nothing.
+
+    A warm day runs 9 Spark jobs: both tables are read with their known
+    schemas, the watermark and the row count come from one aggregate,
+    the anti-join reads only the table's months the batch can touch, and
+    the weather check is one join on one partition."""
     from . import catalog
-    from .operators.incremental import get_watermark, incremental_rows
+    from .operators.incremental import (
+        incremental_range,
+        incremental_rows,
+        table_watermark,
+    )
     from .operators.sinks import (
         dedupe_by_key,
+        rows_to_insert,
         upsert_last_writer_wins,
         write_partitioned,
     )
 
     spark = _spark()
     source = catalog.violations(spark, args.sf_dir)
-    try:
-        existing = spark.read.parquet(f"{args.warehouse}/violations")
-        cold = False
-    except Exception:
-        existing = source.limit(0)
-        cold = True
     today = (
         dt.date.fromisoformat(args.as_of)
         if args.as_of
         else (source.agg(F.max("violation_date")).collect()[0][0]
               + dt.timedelta(days=1))
     )
-    wm_before = None if cold else get_watermark(existing, "violation_date")
-    n_before = 0 if cold else existing.count()
-    batch = incremental_rows(
-        existing,
-        source,
-        wm_before,
-        date_col="violation_date",
-        key_cols=["violation_id"],
-        cold_start_default=dt.date(1900, 1, 1),
-        today=today,
-    )
+    existing = _read_table(spark, f"{args.warehouse}/violations", source.schema)
+    if existing is None:
+        existing, wm_before, n_before = source.limit(0), None, 0
+    else:
+        wm_before, n_before = table_watermark(existing, "violation_date")
+    cold_start = dt.date(1900, 1, 1)
+    rng = incremental_range(wm_before, cold_start, today)
     inserted = 0
-    if batch is not None:
+    if rng is not None:
+        # a violation_id embeds its month ('{yyyy-MM}_…') and month is
+        # the partition column, so a batch key can only collide inside
+        # the batch's own months: the anti-join reads just those
+        # directories (a planning-time partition prune)
+        lo, hi = (d.strftime("%Y-%m") for d in rng)
+        batch = incremental_rows(
+            existing.where(F.col("month").between(lo, hi)),
+            source,
+            wm_before,
+            date_col="violation_date",
+            key_cols=["violation_id"],
+            cold_start_default=cold_start,
+            today=today,
+        )
         # one task (→ one file) per touched month; the persisted batch
         # serves both the count and the write
         batch = batch.repartition("month").persist()
@@ -128,15 +162,24 @@ def cmd_daily_load(args) -> int:
     # weather twin (reference weather_etl_daily.lambda_handler):
     # last-writer-wins upsert keyed on weather_date, rewritten only when
     # some source row is not already present exactly (new date or
-    # changed values; exceptAll compares NULLs as equal)
+    # changed values): the rows an insert-if-absent keyed on every
+    # column would add. Its anti-join is null-safe, so NULL cells
+    # compare equal as in exceptAll, and w_src is key-unique, so the
+    # count equals exceptAll's. Both sides sit on one partition, so the
+    # check runs in one job with no exchange.
     w_src = dedupe_by_key(
         catalog.weather_daily(spark, args.sf_dir), ["weather_date"]
     )
-    try:
-        w_existing = spark.read.parquet(f"{args.warehouse}/weather_daily")
-    except Exception:
+    w_existing = _read_table(
+        spark, f"{args.warehouse}/weather_daily", w_src.schema
+    )
+    if w_existing is None:
         w_existing = w_src.limit(0)
-    w_changed = w_src.exceptAll(w_existing.select(*w_src.columns)).count()
+    w_changed = rows_to_insert(
+        catalog.dimension_sized(w_existing).hint("shuffle_hash"),
+        w_src,
+        w_src.columns,
+    ).count()
     if w_changed:
         # two-phase rewrite: the merge reads the current table, so the
         # new version lands in a scratch dir first (overwriting a path

@@ -25,10 +25,20 @@ from pyspark.sql import functions as F
 from .sinks import rows_to_insert
 
 
+def table_watermark(
+    existing: DataFrame, date_col: str
+) -> tuple[dt.date | None, int]:
+    """J1 and the table's row count in one aggregate: (max(date_col),
+    rows); the watermark is None on an empty table."""
+    row = existing.agg(
+        F.max(date_col).alias("wm"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    return row["wm"], row["n"]
+
+
 def get_watermark(existing: DataFrame, date_col: str) -> dt.date | None:
     """J1: current high watermark = max(date_col), None on empty table."""
-    row = existing.agg(F.max(date_col).alias("wm")).collect()[0]
-    return row["wm"]
+    return table_watermark(existing, date_col)[0]
 
 
 def incremental_range(

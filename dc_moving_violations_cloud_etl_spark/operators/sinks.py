@@ -18,10 +18,13 @@ construction: merging the same batch twice is a fixpoint.
 
 Scale posture:
 - ``rows_to_insert`` (the kernel of ``insert_if_absent``) is a
-  left-anti join on the PK — at 100 TB this shuffles on the key unless
-  the table is bucketed by PK; AQE converts to broadcast when the
-  incoming batch is small (the daily case: one day of data vs the full
-  table).
+  left-anti join on the PK, with no ``distinct`` on the table's keys (an
+  anti-join's result does not depend on duplicates on the right). At
+  100 TB this shuffles on the key unless the table is bucketed by PK.
+  ``cli daily-load`` hands it only the table's months the batch can
+  touch (``violation_id`` embeds its month, and ``month`` is the
+  partition column), a planning-time partition prune, so a day reads
+  the batch's months, not the table, as MySQL probes its PK index.
 - ``upsert_last_writer_wins`` is an anti-join of the table against the
   batch's keys plus the batch — the shuffle partitions by PK only, and
   with daily batches the incoming side is tiny.
@@ -62,9 +65,11 @@ def rows_to_insert(existing: DataFrame, incoming: DataFrame, keys: Sequence[str]
     """The rows ``INSERT IGNORE`` adds: incoming rows whose key is absent
     from existing (first-writer-wins), intra-batch duplicates reduced to
     one deterministic representative. NULL keys match NULL keys
-    (null-safe anti-join), so an append of this set is idempotent."""
+    (null-safe anti-join), so an append of this set is idempotent. The
+    key side needs no ``distinct``: a left-anti join's result does not
+    depend on duplicates on the right."""
     incoming = dedupe_by_key(incoming, keys)
-    ex_keys = existing.select(*keys).distinct()
+    ex_keys = existing.select(*keys)
     return incoming.join(
         ex_keys, _keys_match(incoming, ex_keys, keys), "left_anti"
     )

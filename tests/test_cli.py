@@ -7,16 +7,26 @@ import pathlib
 import re
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from dc_moving_violations_cloud_etl_spark import catalog
 from dc_moving_violations_cloud_etl_spark.cli import main
+from dc_moving_violations_cloud_etl_spark.operators import incremental
 from dc_moving_violations_cloud_etl_spark.operators.sinks import (
     dedupe_by_key,
     write_partitioned,
 )
 
 CUTOFF = dt.date(1998, 6, 15)
+# jobs per warm day at sf0.001: the watermark/row-count aggregate (2),
+# the batch up to its count (5), the append (1) and the weather check
+# (1), plus 2 file listings that run as jobs because this table has more
+# month directories than
+# spark.sql.sources.parallelPartitionDiscovery.threshold: the read, and
+# the append's refresh of the cached batch, whose plan reads the table.
+# A table under the threshold is listed on the driver: 9 jobs a day.
+DAY_JOB_BUDGET = 11
 
 
 def _warehouse_through(spark, sf_dir, wh, cutoff):
@@ -124,6 +134,134 @@ def test_daily_load_upserts_a_changed_weather_row(spark, sf_dir, tmp_path, capsy
 
     again = _daily_load(wh, sf_dir, CUTOFF + dt.timedelta(days=1), capsys)
     assert again["weather_upserted"] == "0"
+
+
+def test_cold_start_inserts_the_source_before_as_of(spark, sf_dir, tmp_path, capsys):
+    wh = str(tmp_path / "wh")
+    as_of = CUTOFF + dt.timedelta(days=1)
+    want = (
+        catalog.violations(spark, sf_dir)
+        .where(F.col("violation_date") < F.lit(as_of))
+        .select("violation_id").distinct().count()
+    )
+    out = _daily_load(wh, sf_dir, as_of, capsys)
+    assert out["watermark_before"] == "None"
+    assert int(out["inserted"]) == int(out["total"]) == want > 0
+    table = spark.read.parquet(f"{wh}/violations")
+    assert table.count() == want
+    assert table.agg(F.max("violation_date")).first()[0] < as_of
+
+
+def test_unreadable_table_raises_instead_of_a_cold_start(spark, sf_dir, tmp_path, capsys):
+    """A table that exists but cannot be read must not be taken for an
+    empty one: that would re-append every source row."""
+    table = tmp_path / "wh" / "violations"
+    bad = table / f"month={CUTOFF:%Y-%m}" / "part-00000-corrupt.parquet"
+    bad.parent.mkdir(parents=True)
+    bad.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        main([
+            "daily-load", "--sf-dir", sf_dir, "--warehouse", str(tmp_path / "wh"),
+            "--as-of", CUTOFF.isoformat(),
+        ])
+    assert [p for p in table.rglob("*") if p.is_file()] == [bad]
+
+
+def test_violation_ids_embed_their_month(spark, sf_dir):
+    """The month prune of the daily anti-join relies on this: a key can
+    only collide with a key of its own month."""
+    v = catalog.violations(spark, sf_dir)
+    prefixed = F.col("violation_id").startswith(F.concat(F.col("month"), F.lit("_")))
+    assert v.count() > 0
+    assert v.where(~F.coalesce(prefixed, F.lit(False))).count() == 0
+
+
+def test_daily_load_reads_only_the_batch_months(spark, sf_dir, tmp_path, capsys, monkeypatch):
+    wh = str(tmp_path / "wh")
+    _warehouse_through(spark, sf_dir, wh, CUTOFF)
+    table = pathlib.Path(wh) / "violations"
+    wm = spark.read.parquet(str(table)).agg(F.max("violation_date")).first()[0]
+    as_of = CUTOFF + dt.timedelta(days=20)
+    first, last = wm + dt.timedelta(days=1), as_of - dt.timedelta(days=1)
+    sides = []
+    rows = incremental.incremental_rows
+
+    def spy(existing, *a, **kw):
+        sides.append(existing)
+        return rows(existing, *a, **kw)
+
+    monkeypatch.setattr(incremental, "incremental_rows", spy)
+    assert int(_daily_load(wh, sf_dir, as_of, capsys)["inserted"]) > 0
+    (side,) = sides
+    read = {
+        re.search(r"month=([^/]+)/", r[0]).group(1)
+        for r in side.select(F.input_file_name()).distinct().collect()
+    }
+    stored = {p.name.split("=", 1)[1] for p in table.glob("month=*")}
+    assert read
+    assert read <= {m for m in stored if f"{first:%Y-%m}" <= m <= f"{last:%Y-%m}"}
+    assert len(stored) > len(read)
+
+
+def test_warm_daily_load_stays_in_job_budget(spark, sf_dir, tmp_path, capsys):
+    wh = str(tmp_path / "wh")
+    _warehouse_through(spark, sf_dir, wh, CUTOFF)
+    _daily_load(wh, sf_dir, CUTOFF + dt.timedelta(days=10), capsys)  # warm
+    sc = spark.sparkContext
+    group = "job-budget-daily-load"
+    sc.setJobGroup(group, "daily-load")
+    try:
+        out = _daily_load(wh, sf_dir, CUTOFF + dt.timedelta(days=20), capsys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert int(out["inserted"]) > 0
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= DAY_JOB_BUDGET, f"{jobs} jobs"
+
+
+def _weather_with_nulls(spark, sf_dir):
+    """The weather source with one NULL cell (the fixtures hold none);
+    the date of that cell and of an untouched day."""
+    src = dedupe_by_key(catalog.weather_daily(spark, sf_dir), ["weather_date"])
+    null_day, value_day = [
+        r[0] for r in src.orderBy("weather_date").select("weather_date").take(2)
+    ]
+    src = src.withColumn(
+        "precip",
+        F.when(F.col("weather_date") == F.lit(null_day), F.lit(None))
+        .otherwise(F.col("precip")),
+    ).persist()
+    return src, null_day, value_day
+
+
+@pytest.mark.parametrize("stored", ["unchanged", "null_for_value", "value_for_null"])
+def test_weather_check_compares_nulls_as_equal(spark, sf_dir, tmp_path, capsys, monkeypatch, stored):
+    """A NULL cell that differs from the source is a change both ways,
+    and NULL cells that match are not: the exceptAll semantics."""
+    wh = str(tmp_path / "wh")
+    _warehouse_through(spark, sf_dir, wh, CUTOFF)
+    src, null_day, value_day = _weather_with_nulls(spark, sf_dir)
+    monkeypatch.setattr(catalog, "weather_daily", lambda *a, **kw: src)
+    day, value = {
+        "unchanged": (null_day, None),
+        "null_for_value": (value_day, None),
+        "value_for_null": (null_day, 1.5),
+    }[stored]
+    wpath = f"{wh}/weather_daily"
+    src.withColumn(
+        "precip",
+        F.when(F.col("weather_date") == F.lit(day), F.lit(value).cast("double"))
+        .otherwise(F.col("precip")),
+    ).coalesce(1).write.mode("overwrite").parquet(wpath)
+
+    out = _daily_load(wh, sf_dir, CUTOFF + dt.timedelta(days=1), capsys)
+    assert out["weather_upserted"] == ("0" if stored == "unchanged" else "1")
+    table = spark.read.parquet(wpath)
+    assert table.count() == src.count()
+    assert table.exceptAll(src.select(*table.columns)).count() == 0
+    assert table.where(F.col("precip").isNull()).count() == 1
+    src.unpersist()
 
 
 def test_list_names_every_registered_query(capsys):
