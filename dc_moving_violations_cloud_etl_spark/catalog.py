@@ -151,15 +151,6 @@ def register_views(
         _VIEWS[key] = (spark, sf_dir)
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register base tables and the reference-shaped views as temp views
-    (``violations`` / ``weather_daily``), mirroring the driver's DuckDB
-    view registration so ``spark.sql`` text can target the same names."""
-    register_views(
-        spark, sf_dir, [*BASE_TABLES, "violations", "weather_daily"]
-    )
-
-
 # Session-local materialization of the derived tables, mirroring the
 # reference architecture (ETL writes MySQL tables once; the 8 analysis
 # queries hit the materialized tables, not the raw feeds —

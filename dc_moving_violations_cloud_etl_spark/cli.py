@@ -29,18 +29,20 @@ reference's ``INSERT IGNORE`` idempotency contract
 day; ``history-load`` rewrites the table and is the compaction step.
 Like the reference's primary-key index probe, a day's cost follows its
 batch, not the table: the insert-if-absent anti-join reads only the
-months the batch can touch, and a warm day runs 9 Spark jobs. A missing
-table is a cold start; a table that exists but cannot be read is an
-error, never an empty table.
+months the batch can touch, the append counts the rows it writes, and a
+warm day runs 7 Spark jobs. A missing table is a cold start; a table
+that exists but cannot be read is an error, never an empty table.
 """
 
 from __future__ import annotations
 
 import argparse
 import datetime as dt
+import os
+import shutil
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -101,10 +103,11 @@ def cmd_daily_load(args) -> int:
     lambda_handler's INSERT IGNORE). Existing files are never rewritten.
     Replay-safe: re-running inserts nothing.
 
-    A warm day runs 9 Spark jobs: both tables are read with their known
+    A warm day runs 7 Spark jobs: both tables are read with their known
     schemas, the watermark and the row count come from one aggregate,
-    the anti-join reads only the table's months the batch can touch, and
-    the weather check is one join on one partition."""
+    the anti-join reads only the table's months the batch can touch, the
+    append is the batch's only action and counts its rows as it writes
+    them, and the weather check is one join on one partition."""
     from . import catalog
     from .operators.incremental import (
         incremental_range,
@@ -143,21 +146,25 @@ def cmd_daily_load(args) -> int:
         batch = incremental_rows(
             existing.where(F.col("month").between(lo, hi)),
             source,
-            wm_before,
+            rng,
             date_col="violation_date",
             key_cols=["violation_id"],
-            cold_start_default=cold_start,
-            today=today,
         )
-        # one task (→ one file) per touched month; the persisted batch
-        # serves both the count and the write
-        batch = batch.repartition("month").persist()
-        inserted = batch.count()
-        if inserted:
-            write_partitioned(
-                batch, f"{args.warehouse}/violations", "month", mode="append"
-            )
-        batch.unpersist()
+        # the append is the batch's only action and counts its rows as
+        # it writes them: one task (→ one file) per touched month. The
+        # observation sits above the exchange, in the write's own stage:
+        # there an empty batch reads n=0, while below the exchange
+        # reading it raises an AssertionError
+        seen = Observation()
+        write_partitioned(
+            batch.repartition("month").observe(
+                seen, F.count(F.lit(1)).alias("n")
+            ),
+            f"{args.warehouse}/violations",
+            "month",
+            mode="append",
+        )
+        inserted = seen.get["n"]
 
     # weather twin (reference weather_etl_daily.lambda_handler):
     # last-writer-wins upsert keyed on weather_date, rewritten only when
@@ -170,9 +177,8 @@ def cmd_daily_load(args) -> int:
     w_src = dedupe_by_key(
         catalog.weather_daily(spark, args.sf_dir), ["weather_date"]
     )
-    w_existing = _read_table(
-        spark, f"{args.warehouse}/weather_daily", w_src.schema
-    )
+    w_path = f"{args.warehouse}/weather_daily"
+    w_existing = _read_table(spark, w_path, w_src.schema)
     if w_existing is None:
         w_existing = w_src.limit(0)
     w_changed = rows_to_insert(
@@ -181,22 +187,16 @@ def cmd_daily_load(args) -> int:
         w_src.columns,
     ).count()
     if w_changed:
-        # two-phase rewrite: the merge reads the current table, so the
-        # new version lands in a scratch dir first (overwriting a path
-        # that is also an input is rejected by Spark)
-        import shutil
-
-        w_merged = upsert_last_writer_wins(w_existing, w_src, ["weather_date"])
-        w_merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{args.warehouse}/weather_daily_next"
-        )
-        next_df = spark.read.parquet(f"{args.warehouse}/weather_daily_next")
-        next_df.coalesce(1).write.mode("overwrite").parquet(
-            f"{args.warehouse}/weather_daily"
-        )
-        shutil.rmtree(
-            f"{args.warehouse}/weather_daily_next", ignore_errors=True
-        )
+        # the merge reads the current table, and Spark rejects
+        # overwriting a path that is also an input: write the new
+        # version beside it once, then swap it in. A run that dies
+        # between the two steps leaves no table, which the next run
+        # takes for a cold start and rewrites from the source.
+        upsert_last_writer_wins(
+            w_existing, w_src, ["weather_date"]
+        ).coalesce(1).write.mode("overwrite").parquet(f"{w_path}_next")
+        shutil.rmtree(w_path, ignore_errors=True)
+        os.replace(f"{w_path}_next", w_path)
 
     print(
         f"daily-load complete: watermark_before={wm_before} "

@@ -61,24 +61,19 @@ def incremental_range(
 def incremental_rows(
     existing: DataFrame,
     source: DataFrame,
-    watermark: dt.date | None,
+    rng: tuple[dt.date, dt.date],
     date_col: str,
     key_cols: list[str],
-    cold_start_default: dt.date,
-    today: dt.date,
-) -> DataFrame | None:
-    """One incremental batch as the rows to append: bounded source scan
-    from ``watermark`` (J1–J3) → ``rows_to_insert``; None when already up
-    to date. The date predicate is pushed down to the source scan by
-    Catalyst (the engine analog of the reference's server-side
+) -> DataFrame:
+    """One incremental batch as the rows to append: the source rows of
+    the ``incremental_range`` day range ``rng`` (J1–J3) →
+    ``rows_to_insert``. The date predicate is pushed down to the source
+    scan by Catalyst (the engine analog of the reference's server-side
     ``where=ISSUE_DATE >= ms AND < ms``, violation_etl_daily.py:168).
 
     Replay-safe: the anti-join against ``existing`` yields no rows for a
     batch that is already loaded.
     """
-    rng = incremental_range(watermark, cold_start_default, today)
-    if rng is None:
-        return None
     start, end = rng
     fresh = source.where(
         (F.col(date_col) >= F.lit(start)) & (F.col(date_col) <= F.lit(end))
@@ -97,13 +92,11 @@ def incremental_merge(
     """One incremental batch as the whole merged table: ``existing`` plus
     ``incremental_rows`` from its own watermark. Running the same batch
     twice is a no-op."""
-    new = incremental_rows(
-        existing,
-        source,
-        get_watermark(existing, date_col),
-        date_col,
-        key_cols,
-        cold_start_default,
-        today,
+    rng = incremental_range(
+        get_watermark(existing, date_col), cold_start_default, today
     )
-    return existing if new is None else existing.unionByName(new)
+    if rng is None:
+        return existing
+    return existing.unionByName(
+        incremental_rows(existing, source, rng, date_col, key_cols)
+    )

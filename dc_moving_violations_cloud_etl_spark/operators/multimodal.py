@@ -159,20 +159,6 @@ def frame_sample(documents: DataFrame) -> DataFrame:
     )
 
 
-def decode_real(documents: DataFrame) -> DataFrame:
-    """The COMPRESSED-format decoder extension point (JPEG/PNG/H.264
-    need PIL/ffmpeg, absent here). Uncompressed formats ARE decoded for
-    real: see ``decode_bmp_real`` (24bpp BMP, struct-parsed headers +
-    numpy pixel math) and ``decode_wav_real`` (RIFF/PCM16, RMS over the
-    sample array)."""
-    raise NotImplementedError(
-        "compressed media decode requires PIL/ffmpeg, not present in "
-        "this container; decode_bmp_real()/decode_wav_real() are REAL "
-        "decoders for the uncompressed formats, and decode_metadata() "
-        "exercises the same Spark plumbing with a deterministic fake"
-    )
-
-
 # ---------------------------------------------------------------------------
 # REAL codecs for uncompressed formats (zero third-party libs):
 # 24bpp BMP and RIFF/PCM16 WAV are pure struct layouts — the encode
@@ -281,7 +267,6 @@ def decode_bmp_real(documents: DataFrame) -> DataFrame:
     )
 
 
-AHASH_BANDS = 4  # 64-bit aHash split into 4×16-bit Hamming-LSH bands
 AHASH_SCHEMA = "doc_id long, b0 int, b1 int, b2 int, b3 int"
 
 

@@ -44,9 +44,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PRIORITY_COL = "_src_priority"
-
-
 def _keys_match(left: DataFrame, right: DataFrame, keys: Sequence[str]):
     """NULL-SAFE key-equality condition for the replay anti-joins: a
     plain ``=`` never matches NULL keys, so a NULL-keyed row would be

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dc_moving_violations_cloud_etl_spark import catalog
 from dc_moving_violations_cloud_etl_spark.sql_compat import run_sql, translate
 
 
@@ -38,7 +37,6 @@ def test_mysql_text_matches_dataframe_qc(spark, sf_dir):
 
 def test_shims_semantics(spark, sf_dir):
     """DAYNAME full names; FIELD absent value -> 0; %-format tokens."""
-    catalog.register_all(spark, sf_dir)
     row = run_sql(
         spark,
         sf_dir,
