@@ -64,13 +64,14 @@ never gated and never written to the detail or history records.
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import re
 import sys
 import time
 
-from dc_moving_violations_cloud_etl_spark import caching, catalog
+from dc_moving_violations_cloud_etl_spark import caching, catalog, scratch
 from dc_moving_violations_cloud_etl_spark.queries import get_queries
 from dc_moving_violations_cloud_etl_spark.session import get_spark
 
@@ -649,11 +650,14 @@ def measure(
     sampled, not just bracketed (VERDICT r10 rec #1). Extension queries
     in ``heavy`` are timed as the median of three cache-isolated
     passes, every pass kept under ``heavy_passes``; ``--only`` passes
-    its names here as the extension group."""
+    its names here as the extension group. Queries whose timed call
+    published a new ``scratch.staged`` dir are listed under
+    ``staged_while_timed``: their reading includes writing the copy."""
     per_query: dict[str, float] = {}
     errors: dict[str, str] = {}
     degraded: dict[str, str] = {}  # median-of-3 queries that fell back
     heavy_passes: dict[str, list] = {}  # per-pass readings, heavy group
+    staged_while_timed: list[str] = []  # timed calls that wrote a copy
     total = 0.0
     streaming_total = 0.0
     calib_mid: list[float] = []
@@ -665,6 +669,7 @@ def measure(
     measured = [(g, qs) for g, qs in ordered if qs]
     for gi, (_gname, group) in enumerate(measured):
         for name in group:
+            markers = _staged_markers()
             t0 = time.perf_counter()
             try:
                 queries[name](spark, sf_dir).collect()
@@ -743,6 +748,8 @@ def measure(
                     # persists pinned and contaminate every later
                     # timing (ADVICE r3).
                     caching.release_tracked()
+                if _staged_markers() - markers:
+                    staged_while_timed.append(name)
         if gi < len(measured) - 1:
             # mid-run probe at the group boundary (headline→extensions,
             # extensions→streaming): samples the middle of the run the
@@ -772,7 +779,15 @@ def measure(
         out["degraded_medians"] = degraded
     if heavy_passes:
         out["heavy_passes"] = heavy_passes
+    if staged_while_timed:
+        out["staged_while_timed"] = staged_while_timed
     return out
+
+
+def _staged_markers() -> set[str]:
+    """The ``scratch.staged`` dirs published so far: a query whose timed
+    call adds one paid for writing its fixture copy."""
+    return set(glob.glob(os.path.join(scratch.ROOT, "*", scratch.MARKER)))
 
 
 def write_records(

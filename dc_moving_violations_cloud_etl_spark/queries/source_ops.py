@@ -10,8 +10,7 @@ the loop) and the columnar-evolution path a long-lived 100 TB table
 needs when columns are added over time.
 
 Each query stages the ``events`` fixture into the target format ONCE per
-fixture generation (identity-tagged scratch dir, same convention as the
-streaming stage dirs), then answers an aggregate over the staged source;
+fixture generation (``scratch.staged``), then answers an aggregate over the staged source;
 the DuckDB oracle computes the identical aggregate from the original
 parquet — so a hash match proves the format round-trip is lossless,
 including microsecond timestamps (explicit ``timestampFormat``) and
@@ -20,70 +19,18 @@ embedded-JSON string quoting in CSV.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..scratch import staged
 from .registry import QuerySpec, register
 
-_SCRATCH = "/tmp/spark_graft_stream"
 # microsecond-precision timestamps: the default JSON/CSV format writes
 # millis and would silently truncate the fixture's microsecond ts
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-
-
-def _staged(
-    spark: SparkSession,
-    sf_dir: str,
-    kind: str,
-    write,
-    build=None,
-    ident_files: tuple[str, ...] = ("events.parquet",),
-) -> str:
-    """Stage a fixture-derived table via ``write(df, dir)`` once per
-    fixture generation. ``build(spark, sf_dir)`` supplies the DataFrame
-    (default: the raw events table); ``ident_files`` lists EVERY source
-    parquet whose identity (size+mtime) keys the staging — a table built
-    from a join must include all its inputs or a regenerated input would
-    silently serve a stale staged copy."""
-    ident = ":".join(
-        f"{f}={os.stat(f'{sf_dir}/{f}').st_size}"
-        f"-{os.stat(f'{sf_dir}/{f}').st_mtime_ns}"
-        for f in ident_files
-    )
-    tag = hashlib.md5(f"{kind}:{sf_dir}:{ident}".encode()).hexdigest()[:8]
-    d = os.path.join(_SCRATCH, f"src{kind}_{tag}")
-    done = os.path.join(d, "_STAGED")
-    if os.path.exists(done):
-        return d
-    # Stage into a process-private dir and publish with one atomic
-    # rename: two concurrent processes (e.g. the test suite and a sim
-    # run over the same fixture) must never rmtree a directory the
-    # other is mid-writing — the loser of the rename race just discards
-    # its copy.
-    tmp = f"{d}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df = (
-        build(spark, sf_dir)
-        if build is not None
-        else catalog.base(spark, sf_dir, "events")
-    )
-    write(df, tmp)
-    with open(os.path.join(tmp, "_STAGED"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        if os.path.exists(done):
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-        else:
-            shutil.rmtree(d, ignore_errors=True)  # stale partial dir
-            os.rename(tmp, d)
-    return d
 
 
 _AGG_ORACLE = """
@@ -121,11 +68,11 @@ def _roundtrip_agg(df: DataFrame) -> DataFrame:
 
 
 def _json_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _staged(
-        spark,
-        sf_dir,
+    d = staged(
         "json",
-        lambda df, out: df.coalesce(2)
+        sf_dir,
+        lambda out: catalog.base(spark, sf_dir, "events")
+        .coalesce(2)
         .write.option("timestampFormat", _TS_FMT)
         .mode("overwrite")
         .json(out),
@@ -160,11 +107,11 @@ register(
 
 
 def _csv_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _staged(
-        spark,
-        sf_dir,
+    d = staged(
         "csv",
-        lambda df, out: df.coalesce(2)
+        sf_dir,
+        lambda out: catalog.base(spark, sf_dir, "events")
+        .coalesce(2)
         .write.option("header", "true")
         .option("timestampFormat", _TS_FMT)
         .mode("overwrite")
@@ -203,32 +150,25 @@ def _schema_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table with ``mergeSchema``: the evolved column is NULL for v1 rows.
     This is the append-only column-add lifecycle of a long-lived table;
     the audit proves reads stay correct across generations."""
-    path = f"{sf_dir}/events.parquet"
-    st = os.stat(path)
-    tag = hashlib.md5(
-        f"evo:{sf_dir}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
-    d = os.path.join(_SCRATCH, f"srcevo_{tag}")
-    done = os.path.join(d, "_STAGED")
-    if not os.path.exists(done):
-        shutil.rmtree(d, ignore_errors=True)
+
+    def write(out: str) -> None:
         ev = catalog.base(spark, sf_dir, "events")
         (
             ev.where(F.col("event_id") % 2 == 0)
             .select("event_id", "user_id", "event_type")
             .coalesce(1)
             .write.mode("append")
-            .parquet(d)
+            .parquet(out)
         )
         (
             ev.where(F.col("event_id") % 2 == 1)
             .select("event_id", "user_id", "event_type", "value")
             .coalesce(1)
             .write.mode("append")
-            .parquet(d)
+            .parquet(out)
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    d = staged("evo", sf_dir, write)
     merged = spark.read.option("mergeSchema", "true").parquet(d)
     return (
         merged.groupBy("event_type")
@@ -402,11 +342,13 @@ def _orc_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture; JSON/CSV are the text paths): schema preserved by the file
     footer — no timestampFormat needed — and the scan supports the same
     predicate pushdown / column pruning as parquet."""
-    d = _staged(
-        spark,
-        sf_dir,
+    d = staged(
         "orc",
-        lambda df, out: df.coalesce(2).write.mode("overwrite").orc(out),
+        sf_dir,
+        lambda out: catalog.base(spark, sf_dir, "events")
+        .coalesce(2)
+        .write.mode("overwrite")
+        .orc(out),
     )
     return _roundtrip_agg(spark.read.orc(d))
 
@@ -445,15 +387,14 @@ def _partitioned_layout_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-checked surface). The staged copy is identity-keyed on BOTH
     source parquets — violations is a lineitem⋈orders build, so a
     regenerated orders alone must re-stage."""
-    d = _staged(
-        spark,
-        sf_dir,
+    d = staged(
         "monthpart",
-        lambda df, out: df.write.partitionBy("month")
+        sf_dir,
+        lambda out: catalog.violations(spark, sf_dir)
+        .write.partitionBy("month")
         .mode("overwrite")
         .parquet(out),
-        build=lambda sp, sf: catalog.violations(sp, sf),
-        ident_files=("lineitem.parquet", "orders.parquet"),
+        files=("lineitem.parquet", "orders.parquet"),
     )
     v = spark.read.parquet(d).where(F.col("month") == _PRUNE_MONTH)
     return (
@@ -499,11 +440,11 @@ def _xml_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     elements (XML convention) and JSON-in-``props`` survives entity
     escaping — both covered by the hash because the aggregate touches
     every column including ts extrema."""
-    d = _staged(
-        spark,
-        sf_dir,
+    d = staged(
         "xml",
-        lambda df, out: df.coalesce(2)
+        sf_dir,
+        lambda out: catalog.base(spark, sf_dir, "events")
+        .coalesce(2)
         .write.format("xml")
         .option("rootTag", "events")
         .option("rowTag", "event")
@@ -552,10 +493,12 @@ def _py_sink_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(make_jsonl_sink())
 
-    def write(df: DataFrame, out: str) -> None:
-        df.coalesce(2).write.format(SINK_NAME).mode("append").save(out)
+    def write(out: str) -> None:
+        catalog.base(spark, sf_dir, "events").coalesce(2).write.format(
+            SINK_NAME
+        ).mode("append").save(out)
 
-    d = _staged(spark, sf_dir, "pysink", write)
+    d = staged("pysink", sf_dir, write)
     schema = (
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"
@@ -875,29 +818,25 @@ def _binaryfile_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytically recomputable by the oracle from the ``documents``
     table alone: a hash match proves the source read every byte of
     every file exactly once."""
-    def _write(df: DataFrame, out: str) -> None:
+    def write(out: str) -> None:
+        docs = (
+            catalog.base(spark, sf_dir, "documents")
+            .where(F.col("doc_id") % 10 == 0)
+            .select(
+                "doc_id",
+                F.lower(
+                    F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
+                ).alias("norm"),
+            )
+        )
         os.makedirs(out, exist_ok=True)
-        for row in df.toLocalIterator():
+        for row in docs.toLocalIterator():
             with open(
                 os.path.join(out, f"doc_{row['doc_id']}.bin"), "wb"
             ) as f:
                 f.write(row["norm"].encode("utf-8"))
 
-    d = _staged(
-        spark,
-        sf_dir,
-        "binfile",
-        _write,
-        build=lambda s, sd: catalog.base(s, sd, "documents")
-        .where(F.col("doc_id") % 10 == 0)
-        .select(
-            "doc_id",
-            F.lower(
-                F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-            ).alias("norm"),
-        ),
-        ident_files=("documents.parquet",),
-    )
+    d = staged("binfile", sf_dir, write, files=("documents.parquet",))
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")

@@ -579,40 +579,26 @@ def _py_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..catalog import normalize_event_ts, read_parquet
+    from ..scratch import links, private_dir, staged
     from ..sources.py_sink import STREAM_SINK_NAME, make_jsonl_stream_sink
-    from ..streaming.daily import _SCRATCH_ROOT, _run_to_completion, _stage_dir
+    from ..streaming.daily import _run_to_completion
 
     spark.dataSource.register(make_jsonl_stream_sink())
 
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
-    import hashlib as _hashlib
-
-    tag = _hashlib.md5(f"pystreamsink:{sf_dir}".encode()).hexdigest()[:8]
-    # pid-keyed: this query rmtrees and rewrites its own output dir, so
-    # concurrent harnesses must each get a private copy; stale copies
-    # from dead processes are swept best-effort (VERDICT r2: scratch
-    # state must not accumulate across rounds; portable age-gated
-    # liveness probe per ADVICE r4)
-    from ..scratch import sweep_dead_scratch
-
-    sweep_dead_scratch(
-        _SCRATCH_ROOT, ("pystreamsink_", "backfill_ckpt_", "occ_rollup_")
-    )
-    out = os.path.join(
-        _SCRATCH_ROOT, f"pystreamsink_out_{tag}_{os.getpid()}"
-    )
-    ckpt = os.path.join(
-        _SCRATCH_ROOT, f"pystreamsink_ckpt_{tag}_{os.getpid()}"
-    )
-    # fresh drain per run: the round-trip compares against the full
-    # fixture, so a warm checkpoint (no new input -> no batches) would
-    # leave a stale output dir from an earlier code version
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    # fresh drain per run into a per-process dir: the round-trip
+    # compares against the full fixture, so a warm checkpoint (no new
+    # input -> no batches) would leave a stale output dir from an
+    # earlier code version
+    root = private_dir("pystreamsink")
+    out = os.path.join(root, "out")
+    ckpt = os.path.join(root, "ckpt")
 
     stream = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
     try:
         _run_to_completion(
@@ -730,17 +716,16 @@ def _occ_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import normalize_event_ts, read_parquet
     from ..operators import snapshots
-    from ..streaming.backfill import _stage_multifile
-    from ..streaming.daily import _SCRATCH_ROOT, _run_to_completion
+    from ..scratch import private_dir, staged
+    from ..streaming.backfill import multifile_writer
+    from ..streaming.daily import _run_to_completion
 
     path = f"{sf_dir}/events.parquet"
-    stage = _stage_multifile(spark, path, "occroll")
-    table_dir = os.path.join(
-        _SCRATCH_ROOT, f"occ_rollup_table_{os.getpid()}"
-    )
-    ckpt = os.path.join(_SCRATCH_ROOT, f"occ_rollup_ckpt_{os.getpid()}")
-    _shutil.rmtree(table_dir, ignore_errors=True)
-    _shutil.rmtree(ckpt, ignore_errors=True)
+    # the backfill's 4-file backlog
+    stage = staged("backfill", sf_dir, multifile_writer(spark, path))
+    root = private_dir("occ_rollup")
+    table_dir = os.path.join(root, "table")
+    ckpt = os.path.join(root, "ckpt")
 
     schema = read_parquet(spark, path).schema
     stream = normalize_event_ts(
@@ -842,29 +827,23 @@ def _chained_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..catalog import normalize_event_ts, read_parquet
-    from ..scratch import sweep_dead_scratch
+    from ..scratch import links, private_dir, staged
     from ..sources.py_sink import STREAM_SINK_NAME, make_jsonl_stream_sink
-    from ..streaming.daily import (
-        _SCRATCH_ROOT,
-        _drain_memory_sink,
-        _run_to_completion,
-        _stage_dir,
-    )
+    from ..streaming.daily import _drain_memory_sink, _run_to_completion
 
     spark.dataSource.register(make_jsonl_stream_sink())
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
     tag = _hashlib.md5(f"chain:{sf_dir}".encode()).hexdigest()[:8]
-    sweep_dead_scratch(_SCRATCH_ROOT, ("chain_",))
-    bronze = os.path.join(_SCRATCH_ROOT, f"chain_bronze_{tag}_{os.getpid()}")
-    ck1 = os.path.join(_SCRATCH_ROOT, f"chain_ck1_{tag}_{os.getpid()}")
-    ck2 = os.path.join(_SCRATCH_ROOT, f"chain_ck2_{tag}_{os.getpid()}")
-    for d in (bronze, ck1, ck2):
-        shutil.rmtree(d, ignore_errors=True)
+    root = private_dir("chain")
+    bronze = os.path.join(root, "bronze")
+    ck1 = os.path.join(root, "ckpt")
 
     # stage 1: map-only ETL -> custom Python streaming sink (bronze)
     src = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
     stage1 = src.where(F.col("event_type") == "click").select(
         "event_id", "ts", "user_id", "value"
@@ -908,7 +887,6 @@ def _chained_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(ck1, ignore_errors=True)
-        shutil.rmtree(ck2, ignore_errors=True)
 
 
 register(

@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 from .. import catalog
 from ..expressions import wide_product
 from ..oracle import with_ref_views
+from ..scratch import private_dir, staged
 from .registry import QuerySpec, register
 
 
@@ -878,29 +879,16 @@ def _snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     diffs them — "what changed since version 1" asked of the table
     itself, which the reference's overwrite-in-place MySQL tables
     structurally cannot answer. The staged table is built once per
-    fixture generation (process-private dir + atomic rename, the
-    round-trip sources' convention) so repeated runs are reads, not
-    writes.
+    fixture generation (``scratch.staged``) so repeated runs are reads,
+    not writes.
 
     Scale posture: each snapshot write is one parquet write of that
     version's data (no history rewrite); version reads are ordinary
     parquet scans with all pushdown intact; the diff is one key join of
     two version scans."""
-    import hashlib
-    import os
-    import shutil
-
     from ..operators.snapshots import read_snapshot, write_snapshot
 
-    src = f"{sf_dir}/events.parquet"
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"snap:{src}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
-    table_dir = f"/tmp/spark_graft_stream/snap_{tag}"
-    if not os.path.exists(os.path.join(table_dir, "_versions.json")):
-        tmp = f"{table_dir}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+    def write(out: str) -> None:
         ev = catalog.base(spark, sf_dir, "events").select(
             "user_id",
             F.to_date("ts").alias("d"),
@@ -912,13 +900,11 @@ def _snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_snapshot(
             state(ev.where(F.col("d") < F.lit(_SNAP_SPLIT).cast("date"))),
-            tmp,
+            out,
         )
-        write_snapshot(state(ev), tmp)
-        try:
-            os.rename(tmp, table_dir)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+        write_snapshot(state(ev), out)
+
+    table_dir = staged("snap", sf_dir, write)
     v1 = read_snapshot(spark, table_dir, 1).alias("v1")
     v2 = read_snapshot(spark, table_dir, None).alias("v2")  # latest = 2
     return (
@@ -1003,31 +989,16 @@ def _rollup_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: the serving read scans rollup rows (days x agencies
     — thousands), not fact rows (billions at 100 TB); count partials
     re-aggregate associatively to any coarser grain."""
-    import hashlib
-    import os
-    import shutil
-
-    src = f"{sf_dir}/lineitem.parquet"
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"rollup:{src}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
-    d = f"/tmp/spark_graft_stream/rollup_{tag}"
-    done = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(done):
-        tmp = f"{d}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            catalog.violations(spark, sf_dir)
-            .groupBy("violation_date", "month", "issuing_agency_name")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+    d = staged(
+        "rollup",
+        sf_dir,
+        lambda out: catalog.violations(spark, sf_dir)
+        .groupBy("violation_date", "month", "issuing_agency_name")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .write.mode("overwrite")
+        .parquet(out),
+        files=("lineitem.parquet", "orders.parquet"),
+    )
     return (
         spark.read.parquet(d)
         .groupBy("month", "issuing_agency_name")
@@ -1322,7 +1293,7 @@ def _bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical layout changed nothing.
 
     Staging: the bucketed files are written once per fixture generation
-    (atomic-rename staging, shared with the source round-trips); each
+    (``scratch.staged``); each
     session re-registers them as EXTERNAL bucketed tables via CREATE
     TABLE ... CLUSTERED BY ... LOCATION — the metadata round-trip a
     warehouse catalog performs. Table names carry the fixture-identity
@@ -1330,14 +1301,10 @@ def _bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from .source_ops import _staged
-
-    def build(spark_: SparkSession, sf_dir_: str) -> DataFrame:
-        return catalog.violations(spark_, sf_dir_).select(
+    def write(d: str) -> None:
+        df = catalog.violations(spark, sf_dir).select(
             "violation_id", "month", "fine_amount"
         )
-
-    def write(df: DataFrame, d: str) -> None:
         for side in ("a", "b"):
             tmp_name = f"_stage_bucket_{side}_{os.getpid()}"
             (
@@ -1351,18 +1318,13 @@ def _bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             # bucket-tagged files stay for the post-rename CREATE TABLE
             spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
 
-    d = _staged(
-        spark,
-        sf_dir,
-        "bucketv",
-        write,
-        build=build,
-        ident_files=("lineitem.parquet", "orders.parquet"),
+    d = staged(
+        "bucketv", sf_dir, write, files=("lineitem.parquet", "orders.parquet")
     )
-    tag = os.path.basename(d).split("_")[-1]
+    tag = os.path.basename(d).replace("-", "_")
     names = {}
     for side in ("a", "b"):
-        t = f"v_bucketed_{side}_{tag}"
+        t = f"v_{tag}_{side}"
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {t} "
             "(violation_id STRING, month STRING, fine_amount DOUBLE) "
@@ -1545,9 +1507,6 @@ def _wap_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     one parquet write + an O(versions) manifest swap — no history
     rewrite (operators/snapshots.py).
     """
-    import os
-    import shutil
-
     from ..operators import snapshots
 
     # pre-filter any PRE-EXISTING null/empty keys so the "good"
@@ -1574,16 +1533,8 @@ def _wap_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # per-PROCESS table dir: this query mutates and re-reads its own
     # demo table, and two concurrent harnesses (pytest plan guardrail +
-    # a sim sweep) must not rmtree each other mid-run; stale dirs from
-    # dead processes are swept best-effort (portable age-gated liveness
-    # probe per ADVICE r4)
-    from ..scratch import sweep_dead_scratch
-
-    root = "/tmp/spark_graft_stream"
-    os.makedirs(root, exist_ok=True)
-    sweep_dead_scratch(root, ("wap_demo_table_",))
-    table_dir = os.path.join(root, f"wap_demo_table_{os.getpid()}")
-    shutil.rmtree(table_dir, ignore_errors=True)
+    # a sim sweep) must not rmtree each other mid-run
+    table_dir = private_dir("wap_demo_table")
 
     rows = []
     for batch_name, cand in (("candidate_bad", bad), ("candidate_good", v)):

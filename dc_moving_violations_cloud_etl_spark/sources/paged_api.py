@@ -286,7 +286,7 @@ def make_paged_events_source():
 def paged_fixture_path(sf_dir: str) -> str:
     """Stage the events fixture as a SORTED, page-aligned parquet file
     (row groups of DEFAULT_PAGE_SIZE rows, ordered by event_id), once
-    per fixture generation (identity-keyed, atomic-rename publish).
+    per fixture generation (``scratch.staged``).
 
     This models the server side of a paginated API honestly: a real
     endpoint serves ``resultOffset`` pages from its own key-ordered
@@ -298,33 +298,19 @@ def paged_fixture_path(sf_dir: str) -> str:
     pyarrow filter prunes by footer stats and each page task decodes
     exactly the 1-2 row groups that intersect its key range.
     """
-    import hashlib
     import os
-    import shutil
 
     import pyarrow.parquet as pq
 
-    src = f"{sf_dir}/events.parquet"
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"pagedsrc:{sf_dir}:{st.st_size}-{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
-    scratch = "/tmp/spark_graft_stream"
-    d = os.path.join(scratch, f"pagedsrc_{tag}")
-    out = os.path.join(d, "events_sorted.parquet")
-    if os.path.exists(out):
-        return out
-    os.makedirs(scratch, exist_ok=True)
-    tmp = f"{d}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    t = pq.read_table(src).sort_by("event_id")
-    pq.write_table(
-        t, os.path.join(tmp, "events_sorted.parquet"),
-        row_group_size=DEFAULT_PAGE_SIZE,
-    )
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the publish race
-    return out
+    from ..scratch import staged
+
+    def write(out: str) -> None:
+        os.makedirs(out)
+        t = pq.read_table(f"{sf_dir}/events.parquet").sort_by("event_id")
+        pq.write_table(
+            t, os.path.join(out, "events_sorted.parquet"),
+            row_group_size=DEFAULT_PAGE_SIZE,
+        )
+
+    d = staged("pagedsrc", sf_dir, write)
+    return os.path.join(d, "events_sorted.parquet")

@@ -13,13 +13,14 @@ per-batch telemetry here is the auditable evidence of that pacing.
 from __future__ import annotations
 
 import hashlib
-import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import read_parquet
-from .daily import PROGRESS_LEDGER, _SCRATCH_ROOT, _run_to_completion
+from ..scratch import private_dir, staged
+from .daily import PROGRESS_LEDGER, _run_to_completion
 
 N_BACKFILL_FILES = 4
 
@@ -32,40 +33,16 @@ N_BACKFILL_FILES = 4
 _RUN_SEQ = iter(range(1, 1 << 30))
 
 
-def _stage_multifile(spark: SparkSession, path: str, tag: str) -> str:
-    """Stage the single-file fixture as N_BACKFILL_FILES parquet parts
-    (identity-keyed on the fixture, like source_ops._staged) so the
-    file-stream source has a multi-file backlog to pace through."""
-    import shutil
-
-    st = os.stat(path)
-    ident = f"{tag}-{st.st_size}-{st.st_mtime_ns}"
-    d = os.path.join(_SCRATCH_ROOT, ident)
-    marker = os.path.join(d, "_STAGED_OK")
-    if os.path.exists(marker):
-        return d
-    # stage into a process-private dir, publish with one atomic rename
-    # (two concurrent harnesses must never write the same directory);
-    # the loser of the rename race discards its copy
-    tmp = f"{d}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
+def multifile_writer(spark: SparkSession, path: str):
+    """A ``scratch.staged`` writer that stages the single-file fixture
+    as N_BACKFILL_FILES parquet parts, so the file-stream source has a
+    multi-file backlog to pace through."""
+    return lambda out: (
         read_parquet(spark, path)
         .repartition(N_BACKFILL_FILES)
         .write.mode("overwrite")
-        .parquet(tmp)
+        .parquet(out)
     )
-    with open(os.path.join(tmp, "_STAGED_OK"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        if os.path.exists(marker):
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            shutil.rmtree(d, ignore_errors=True)
-            os.rename(tmp, d)
-    return d
 
 
 def rate_limited_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,7 +61,7 @@ def rate_limited_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     not callback throughput, so the extra per-batch work was pure
     contention surface)."""
     path = f"{sf_dir}/events.parquet"
-    stage = _stage_multifile(spark, path, "backfill")
+    stage = staged("backfill", sf_dir, multifile_writer(spark, path))
     tag = hashlib.md5(f"backfill:{sf_dir}".encode()).hexdigest()[:8]
     qname = f"rate_limited_backfill_{tag}_{next(_RUN_SEQ)}"
 
@@ -112,12 +89,7 @@ def rate_limited_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a warm checkpoint (which would legitimately process zero batches)
     # is the wrong fixture — unlike filesink.py, whose warm-replay
     # no-op IS the property under test
-    ckpt = os.path.join(
-        _SCRATCH_ROOT, f"backfill_ckpt_{tag}_{os.getpid()}"
-    )
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = private_dir("backfill_ckpt")
     try:
         _run_to_completion(
             spark,

@@ -14,49 +14,12 @@ synchronously so the result is deterministic and oracle-checkable.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_event_ts, read_parquet
-
-
-_SCRATCH_ROOT = "/tmp/spark_graft_stream"
-
-
-def _stage_dir(path: str, tag: str) -> str:
-    """The parquet file-stream source requires a DIRECTORY; the fixtures
-    are single read-only files. Stage a symlink in a scratch dir (the
-    local FS source follows symlinks; no data copy).
-
-    The dir name includes the fixture file's identity (size + mtime), so
-    a regenerated fixture never aliases a stale staging dir; stale
-    generations of the same tag are swept best-effort (VERDICT r2 rec #6:
-    scratch state accumulating across rounds)."""
-    import shutil
-
-    st = os.stat(path)
-    ident = f"{tag}-{st.st_size}-{st.st_mtime_ns}"
-    try:
-        for entry in os.listdir(_SCRATCH_ROOT):
-            if entry.startswith(f"{tag}-") and entry != ident:
-                shutil.rmtree(
-                    os.path.join(_SCRATCH_ROOT, entry), ignore_errors=True
-                )
-    except FileNotFoundError:
-        pass
-    d = os.path.join(_SCRATCH_ROOT, ident)
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, os.path.basename(path))
-    # idempotent link: two concurrent harnesses can both pass the
-    # islink check before either links (TOCTOU, r10 review) — the
-    # loser's symlink must be a no-op, not a crash
-    try:
-        os.symlink(path, link)
-    except FileExistsError:
-        pass
-    return d
+from ..scratch import links, staged
 
 
 # Stateful streaming operators instantiate one state store PER SHUFFLE
@@ -144,7 +107,9 @@ def daily_rollup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"daily_rollup_{tag}"
 
     events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
 
     agg = events.groupBy(
@@ -192,7 +157,9 @@ def late_data_watermark_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
     name = f"late_rollup_{tag}"
 
     events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
 
     agg = (
@@ -235,7 +202,9 @@ def session_window_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"session_window_{tag}"
 
     events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
 
     agg = (
@@ -284,25 +253,16 @@ def update_mode_counts_streaming(
     snapshots. Counts are monotone, so the final table is the per-key
     MAX over emissions — deterministic regardless of slicing, hence
     fully oracle-checkable (= the flat per-type counts)."""
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .upsert import _stage_split
+    from .upsert import split_writer
 
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
-    st = os.stat(path)
-    tag = hashlib.md5(
-        f"upsert:{sf_dir}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
     name = "update_mode_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
     events = normalize_event_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(_stage_split(spark, path, tag))
+        .parquet(staged("split", sf_dir, split_writer(spark, path)))
     )
     agg = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events")
@@ -340,7 +300,9 @@ def hopping_window_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"hop_rollup_{tag}"
 
     events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
     agg = (
         events.withWatermark("ts", "1 day")

@@ -15,20 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_event_ts, read_parquet
-from .daily import _drain_memory_sink, _run_to_completion, _stage_dir
-
-
-def _stage_dir_doubled(path: str, tag: str) -> str:
-    """Stage TWO links to the same fixture file so the stream provably
-    contains duplicates (each event arrives twice, possibly across
-    micro-batches) — the dedup then has real work to do."""
-    d = _stage_dir(path, tag)
-    twin = os.path.join(d, "copy2_" + os.path.basename(path))
-    try:  # idempotent under concurrent staging (same TOCTOU as daily)
-        os.symlink(path, twin)
-    except FileExistsError:
-        pass
-    return d
+from ..scratch import links, staged
+from .daily import _drain_memory_sink, _run_to_completion
 
 
 def dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,8 +32,17 @@ def dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(f"dedup:{sf_dir}".encode()).hexdigest()[:8]
     name = f"stream_dedup_{tag}"
 
+    def doubled(d: str) -> None:
+        # TWO links to the same fixture file, so the stream provably
+        # contains duplicates (each event arrives twice, possibly
+        # across micro-batches) and the dedup has real work to do
+        links(path)(d)
+        os.symlink(path, os.path.join(d, "copy2_" + os.path.basename(path)))
+
     events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir_doubled(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("dedup", sf_dir, doubled)
+        )
     )
 
     deduped = (

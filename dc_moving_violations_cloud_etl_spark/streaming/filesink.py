@@ -14,15 +14,14 @@ sink's own output.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_event_ts, read_parquet
-from .daily import _SCRATCH_ROOT, _run_to_completion, _stage_dir
+from ..scratch import fixture_dir, links, staged
+from .daily import _run_to_completion
 
 
 def file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -31,22 +30,10 @@ def file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate over the source)."""
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
-    st = os.stat(path)
-    tag = hashlib.md5(f"fsink:{sf_dir}".encode()).hexdigest()[:8]
-    # sweep is keyed per FIXTURE (tag) like statestore._checkpoint_dir:
-    # only a regenerated generation of the SAME sf dir is stale — an
-    # unscoped sweep would delete the other fixtures' sinks on every
-    # sf0.001/sf0.01/sf0.1 alternation and defeat the warm-replay path
-    ident = f"fsink-{tag}-{st.st_size}-{st.st_mtime_ns}"
-    try:
-        for entry in os.listdir(_SCRATCH_ROOT):
-            if entry.startswith(f"fsink-{tag}-") and entry != ident:
-                shutil.rmtree(
-                    os.path.join(_SCRATCH_ROOT, entry), ignore_errors=True
-                )
-    except FileNotFoundError:
-        pass
-    root = os.path.join(_SCRATCH_ROOT, ident)
+    # the checkpoint records the source dir's path, so this kind must be
+    # renamed whenever the source's kind changes: a warm checkpoint over
+    # a renamed source fails to resume ("Wrong basePath")
+    root = fixture_dir("filesink", sf_dir, "events.parquet")
     out_dir = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
 
@@ -54,7 +41,9 @@ def file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # new files and commits nothing — the manifest (and therefore the
     # read below) is unchanged: exactly-once across replays.
     events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
     projected = events.select(
         "event_id",

@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_event_ts, read_parquet
-from .daily import _drain_memory_sink, _run_to_completion, _stage_dir
+from ..scratch import links, staged
+from .daily import _drain_memory_sink, _run_to_completion
 
 LOWER_S = 1
 UPPER_S = 300
@@ -36,7 +37,7 @@ def interval_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"ssjoin:{sf_dir}".encode()).hexdigest()[:8]
     name = f"interval_join_{tag}"
-    stage = _stage_dir(path, tag)
+    stage = staged("events", sf_dir, links(path))
 
     def _stream():
         return normalize_event_ts(
@@ -111,7 +112,9 @@ def static_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"static_join_{tag}"
 
     ev = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
 
     dim = read_parquet(spark, f"{sf_dir}/customer.parquet").select(
@@ -187,7 +190,7 @@ def left_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(f"ssloj:{sf_dir}".encode()).hexdigest()[:8]
     name = f"outer_join_{tag}"
-    stage = _stage_dir(path, tag)
+    stage = staged("events", sf_dir, links(path))
 
     def _stream():
         return normalize_event_ts(
@@ -293,7 +296,7 @@ def full_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(f"ssfoj:{sf_dir}".encode()).hexdigest()[:8]
     name = f"full_outer_join_{tag}"
-    stage = _stage_dir(path, tag)
+    stage = staged("events", sf_dir, links(path))
 
     def _stream():
         return normalize_event_ts(
@@ -390,7 +393,7 @@ def left_semi_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"sssemi:{sf_dir}".encode()).hexdigest()[:8]
     name = f"semi_join_{tag}"
-    stage = _stage_dir(path, tag)
+    stage = staged("events", sf_dir, links(path))
 
     def _stream():
         return normalize_event_ts(
@@ -477,7 +480,7 @@ def right_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(f"ssroj:{sf_dir}".encode()).hexdigest()[:8]
     name = f"right_outer_join_{tag}"
-    stage = _stage_dir(path, tag)
+    stage = staged("events", sf_dir, links(path))
 
     def _stream():
         return normalize_event_ts(

@@ -20,17 +20,14 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_event_ts, read_parquet
-from .daily import (
-    PROGRESS_LEDGER,
-    _SCRATCH_ROOT,
-    _drain_memory_sink,
-    _run_to_completion,
-)
+from ..scratch import private_dir, staged
+from .daily import PROGRESS_LEDGER, _drain_memory_sink, _run_to_completion
 
 # late = days strictly before this bound; the mid file absorbs the
 # one-batch watermark lag; the bulk file holds the global max event time
@@ -38,55 +35,37 @@ LATE_BOUND = "2024-01-06"
 MID_BOUND = "2024-01-18"
 
 
-def _stage_latedrop(spark: SparkSession, path: str) -> str:
-    """Stage the fixture as (bulk, mid, late) parquet files with
-    ascending pinned mtimes so the file source (oldest-first) replays
-    them in that order. Identity-keyed on the fixture like
-    ``backfill._stage_multifile``; atomic single-rename publish."""
-    import shutil
+def _latedrop_writer(spark: SparkSession, path: str):
+    """A ``scratch.staged`` writer that stages the fixture as (bulk,
+    mid, late) parquet files with ascending pinned mtimes, so the file
+    source (oldest-first) replays them in that order."""
 
-    st = os.stat(path)
-    ident = f"latedrop-{st.st_size}-{st.st_mtime_ns}"
-    d = os.path.join(_SCRATCH_ROOT, ident)
-    marker = os.path.join(d, "_STAGED_OK")
-    if os.path.exists(marker):
-        return d
-    tmp = f"{d}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    ev = normalize_event_ts(read_parquet(spark, path))
-    parts = [
-        ("f1_bulk", ev.where(F.col("ts") >= MID_BOUND), 1_000_000),
-        (
-            "f2_mid",
-            ev.where(
-                (F.col("ts") >= LATE_BOUND) & (F.col("ts") < MID_BOUND)
+    def write(out: str) -> None:
+        os.makedirs(out)
+        ev = normalize_event_ts(read_parquet(spark, path))
+        parts = [
+            ("f1_bulk", ev.where(F.col("ts") >= MID_BOUND), 1_000_000),
+            (
+                "f2_mid",
+                ev.where(
+                    (F.col("ts") >= LATE_BOUND) & (F.col("ts") < MID_BOUND)
+                ),
+                2_000_000,
             ),
-            2_000_000,
-        ),
-        ("f3_late", ev.where(F.col("ts") < LATE_BOUND), 3_000_000),
-    ]
-    for name, df, mtime in parts:
-        sub = os.path.join(tmp, f"_{name}")
-        df.coalesce(1).write.parquet(sub)
-        src = next(
-            f for f in os.listdir(sub) if f.endswith(".parquet")
-        )
-        dst = os.path.join(tmp, f"{name}.parquet")
-        os.rename(os.path.join(sub, src), dst)
-        os.utime(dst, (mtime, mtime))
-        shutil.rmtree(sub, ignore_errors=True)
-    with open(os.path.join(tmp, "_STAGED_OK"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        if os.path.exists(marker):
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            shutil.rmtree(d, ignore_errors=True)
-            os.rename(tmp, d)
-    return d
+            ("f3_late", ev.where(F.col("ts") < LATE_BOUND), 3_000_000),
+        ]
+        for name, df, mtime in parts:
+            sub = os.path.join(out, f"_{name}")
+            df.coalesce(1).write.parquet(sub)
+            src = next(
+                f for f in os.listdir(sub) if f.endswith(".parquet")
+            )
+            dst = os.path.join(out, f"{name}.parquet")
+            os.rename(os.path.join(sub, src), dst)
+            os.utime(dst, (mtime, mtime))
+            shutil.rmtree(sub, ignore_errors=True)
+
+    return write
 
 
 def late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,7 +74,7 @@ def late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the books: emitted sealed windows + their event totals from the
     sink, dropped-late total from the engine's progress telemetry."""
     path = f"{sf_dir}/events.parquet"
-    stage = _stage_latedrop(spark, path)
+    stage = staged("latedrop", sf_dir, _latedrop_writer(spark, path))
     tag = hashlib.md5(f"latedrop:{sf_dir}".encode()).hexdigest()[:8]
     name = f"stream_latedrop_{tag}"
 
@@ -111,10 +90,7 @@ def late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
-    ckpt = os.path.join(_SCRATCH_ROOT, f"latedrop_ckpt_{tag}_{os.getpid()}")
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = private_dir("latedrop_ckpt")
     try:
         _run_to_completion(
             spark,

@@ -27,7 +27,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .daily import _drain_memory_sink, _stage_dir
+from ..scratch import private_dir
+from .daily import _drain_memory_sink
 
 STREAM_SOURCE_NAME = "daily_ingest_source"
 
@@ -257,16 +258,10 @@ def custom_source_ingest_streaming(
     the final table is independent of the batch slicing — deterministic
     and oracle-checkable."""
     import hashlib
-    import os
 
     path = f"{sf_dir}/events.parquet"
-    # reuse the staging-dir identity convention for the CHECKPOINT dir:
-    # offsets are bound to one fixture generation
-    ckpt = os.path.join(
-        _stage_dir(path, hashlib.md5(f"cstream:{sf_dir}".encode()).hexdigest()[:8]),
-        "ckpt",
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
+    # fresh offsets every run, private to this process
+    ckpt = private_dir("cstream_ckpt")
 
     spark.dataSource.register(make_daily_ingest_source())
     ev = (

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog import normalize_event_ts, read_parquet
-from .daily import _drain_memory_sink, _run_to_completion, _stage_dir
+from ..scratch import links, staged
+from .daily import _drain_memory_sink, _run_to_completion
 
 GAP_MS = 30 * 60 * 1000
 
@@ -100,7 +101,9 @@ def stateful_sessions_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"stateful_sessions_{tag}"
 
     events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+        spark.readStream.schema(schema).parquet(
+            staged("events", sf_dir, links(path))
+        )
     )
 
     sessions = (

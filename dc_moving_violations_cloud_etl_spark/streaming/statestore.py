@@ -28,24 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_event_ts, read_parquet
-from .daily import _SCRATCH_ROOT, _drain_memory_sink, _run_to_completion, _stage_dir
-
-
-def _checkpoint_dir(path: str, tag: str) -> str:
-    """Fixture-identity-keyed checkpoint dir (size+mtime, mirroring
-    ``_stage_dir``): a regenerated fixture never aliases a stale
-    checkpoint; stale generations are swept."""
-    st = os.stat(path)
-    ident = f"ckpt_{tag}-{st.st_size}-{st.st_mtime_ns}"
-    try:
-        for entry in os.listdir(_SCRATCH_ROOT):
-            if entry.startswith(f"ckpt_{tag}-") and entry != ident:
-                shutil.rmtree(
-                    os.path.join(_SCRATCH_ROOT, entry), ignore_errors=True
-                )
-    except FileNotFoundError:
-        pass
-    return os.path.join(_SCRATCH_ROOT, ident)
+from ..scratch import fixture_dir, links, staged
+from .daily import _drain_memory_sink, _run_to_completion
 
 
 def _ensure_checkpoint(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -61,7 +45,7 @@ def _ensure_checkpoint(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"ssread:{sf_dir}".encode()).hexdigest()[:8]
-    ckpt = _checkpoint_dir(path, tag)
+    ckpt = fixture_dir("ssread_ckpt", sf_dir, "events.parquet")
     name = f"ssread_{tag}"
 
     commits = os.path.join(ckpt, "commits")
@@ -71,7 +55,9 @@ def _ensure_checkpoint(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     if not committed:
         shutil.rmtree(ckpt, ignore_errors=True)  # partial run → start over
         events = normalize_event_ts(
-            spark.readStream.schema(schema).parquet(_stage_dir(path, tag))
+            spark.readStream.schema(schema).parquet(
+                staged("events", sf_dir, links(path))
+            )
         )
         agg = events.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n")

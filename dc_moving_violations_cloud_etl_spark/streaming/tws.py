@@ -25,14 +25,14 @@ against the flat per-user aggregate.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_event_ts, read_parquet
+from ..scratch import staged
 from .daily import _drain_memory_sink, _run_to_completion
-from .upsert import _stage_split
+from .upsert import split_writer
 
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -92,17 +92,13 @@ def transform_with_state_totals(
     emission."""
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
-    st = os.stat(path)
-    # share the staged even/odd split with the foreachBatch upsert
-    tag = hashlib.md5(
-        f"upsert:{sf_dir}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
     name = "tws_totals_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
     events = normalize_event_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(_stage_split(spark, path, tag))
+        # the even/odd split staged for the foreachBatch upsert
+        .parquet(staged("split", sf_dir, split_writer(spark, path)))
     )
     keyed = events.select(
         "user_id",

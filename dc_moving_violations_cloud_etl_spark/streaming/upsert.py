@@ -17,7 +17,6 @@ time ``ON DUPLICATE KEY UPDATE`` loop at 100 TB.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -25,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_event_ts, read_parquet
+from ..scratch import private_dir, staged
 from .daily import _run_to_completion
 
 
@@ -39,41 +39,24 @@ def _batch_aggregate(df: DataFrame) -> DataFrame:
     )
 
 
-def _stage_split(spark: SparkSession, path: str, tag: str) -> str:
-    """Stage the events fixture as TWO parquet files (even/odd event_id)
-    so ``maxFilesPerTrigger=1`` drives REAL multi-batch execution: the
-    second micro-batch exercises the store read-merge-rewrite path, not
-    just the initial write. Staged once per (fixture, tag); the split is
-    deterministic so re-runs see identical batches."""
-    d = f"/tmp/spark_graft_stream/split_{tag}"
-    done = os.path.join(d, "_STAGED")
-    if os.path.exists(done):
-        return d
-    # stage into a process-private dir, publish with ONE atomic rename —
-    # the same protocol as backfill._stage_multifile: write-in-place +
-    # marker let a concurrent harness rmtree a directory another
-    # process was actively writing or streaming from (r10 review)
-    tmp = f"{d}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    src = read_parquet(spark, path)
-    for i in (0, 1):
-        (
-            src.where(F.col("event_id") % 2 == i)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(tmp)
-        )
-    with open(os.path.join(tmp, "_STAGED"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        if os.path.exists(done):  # lost the publish race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            shutil.rmtree(d, ignore_errors=True)
-            os.rename(tmp, d)
-    return d
+def split_writer(spark: SparkSession, path: str):
+    """A ``scratch.staged`` writer that stages the events fixture as TWO
+    parquet files (even/odd event_id) so ``maxFilesPerTrigger=1``
+    drives REAL multi-batch execution: the second micro-batch exercises
+    the store read-merge-rewrite path, not just the initial write. The
+    split is deterministic so re-runs see identical batches."""
+
+    def write(out: str) -> None:
+        src = read_parquet(spark, path)
+        for i in (0, 1):
+            (
+                src.where(F.col("event_id") % 2 == i)
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(out)
+            )
+
+    return write
 
 
 def incremental_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,24 +67,18 @@ def incremental_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     store independent of the slicing — proven in tests)."""
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
-    # tag includes the fixture file's identity (size + mtime) so a
-    # regenerated fixture never reuses a stale staged copy
-    st = os.stat(path)
-    tag = hashlib.md5(
-        f"upsert:{sf_dir}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
-    store = f"/tmp/spark_graft_stream/store_{tag}"
-    # store and checkpoint are ONE unit of state: a hard kill after the
-    # batches committed but before the finally-rmtree leaves a ckpt
-    # that says "all input processed" — the next run would then delete
-    # the store, commit nothing, and fail reading it back (r10 review)
-    shutil.rmtree(store, ignore_errors=True)
-    shutil.rmtree(f"{store}_ckpt", ignore_errors=True)
+    # store and checkpoint are ONE unit of state, so both live in one
+    # per-process dir emptied on every run: a checkpoint left by a
+    # killed run ("all input processed") is never resumed against a
+    # missing store, and concurrent harnesses never share either
+    root = private_dir("upsert")
+    store = os.path.join(root, "store")
+    ckpt = os.path.join(root, "ckpt")
 
     events = normalize_event_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(_stage_split(spark, path, tag))
+        .parquet(staged("split", sf_dir, split_writer(spark, path)))
     )
 
     def merge(batch_df: DataFrame, _batch_id: int) -> None:
@@ -122,7 +99,7 @@ def incremental_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             merged = upd
-        out = f"{store}_next"
+        out = os.path.join(root, "next")
         merged.write.mode("overwrite").parquet(out)
         shutil.rmtree(store, ignore_errors=True)
         os.rename(out, store)
@@ -132,10 +109,10 @@ def incremental_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             events.writeStream.foreachBatch(merge)
             .trigger(availableNow=True)
-            .option("checkpointLocation", f"{store}_ckpt"),
+            .option("checkpointLocation", ckpt),
         )
     finally:
-        shutil.rmtree(f"{store}_ckpt", ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
     return (
         spark.read.parquet(store)

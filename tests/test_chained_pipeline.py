@@ -10,22 +10,18 @@ import glob
 import json
 import os
 
+from dc_moving_violations_cloud_etl_spark import scratch
 from dc_moving_violations_cloud_etl_spark.queries import QUERIES, get_queries
 
 get_queries()
 
 
 def test_bronze_manifests_cover_exactly_the_part_files(spark, sf_dir):
-    import hashlib
-
     res = QUERIES["stream_chained_pipeline"].build(spark, sf_dir)
     rollup_rows = res.collect()
     assert rollup_rows, "chained pipeline produced no rollup rows"
 
-    tag = hashlib.md5(f"chain:{sf_dir}".encode()).hexdigest()[:8]
-    bronze = os.path.join(
-        "/tmp/spark_graft_stream", f"chain_bronze_{tag}_{os.getpid()}"
-    )
+    bronze = os.path.join(scratch.ROOT, f"chain_{os.getpid()}", "bronze")
     assert os.path.isdir(bronze), "bronze hand-off dir missing"
 
     referenced: list[str] = []

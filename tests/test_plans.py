@@ -402,17 +402,16 @@ def test_dynamic_partition_pruning_fires(spark, sf_dir):
     partition pruning, and the mechanism that keeps a 100 TB
     partitioned fact from being listed in full when the selective
     predicate lives on the dimension side."""
-    from dc_moving_violations_cloud_etl_spark.queries.source_ops import _staged
+    from dc_moving_violations_cloud_etl_spark.scratch import staged
 
-    d = _staged(
-        spark,
-        sf_dir,
+    d = staged(
         "monthpart",
-        lambda df, out: df.write.partitionBy("month")
+        sf_dir,
+        lambda out: catalog.violations(spark, sf_dir)
+        .write.partitionBy("month")
         .mode("overwrite")
         .parquet(out),
-        build=lambda sp, sf: catalog.violations(sp, sf),
-        ident_files=("lineitem.parquet", "orders.parquet"),
+        files=("lineitem.parquet", "orders.parquet"),
     )
     fact = spark.read.parquet(d)
     months = [(f"1998-0{m}", 1 if m == 3 else 0) for m in range(1, 8)]

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import shutil
 
+from dc_moving_violations_cloud_etl_spark import scratch
 from dc_moving_violations_cloud_etl_spark.streaming import statestore
 
 from .conftest import assert_df_matches_oracle
@@ -21,11 +22,8 @@ GROUP BY event_type ORDER BY event_type
 
 def test_statestore_cold_then_warm(spark, sf_dir, ddb):
     # force the cold path: wipe this fixture's checkpoint
-    path = f"{sf_dir}/events.parquet"
-    import hashlib
-
-    tag = hashlib.md5(f"ssread:{sf_dir}".encode()).hexdigest()[:8]
-    shutil.rmtree(statestore._checkpoint_dir(path, tag), ignore_errors=True)
+    ckpt = scratch.fixture_dir("ssread_ckpt", sf_dir, "events.parquet")
+    shutil.rmtree(ckpt, ignore_errors=True)
 
     cold = statestore.statestore_counts(spark, sf_dir)
     assert_df_matches_oracle(cold, ddb, _ORACLE, "statestore-cold")
