@@ -1,5 +1,23 @@
 """Fixture catalog: base tables + reference-shaped views.
 
+This is the only module that knows where a fixture lives, what its
+schema is and how Spark reads it:
+
+- ``fixture_path(sf_dir, name)`` — ``{sf_dir}/{name}.parquet``, for a
+  name in ``BASE_TABLES``;
+- ``fixture_schema(spark, sf_dir, name)`` — the raw parquet schema,
+  inferred once per file generation in the process. The generation is
+  ``scratch.generation``: the file's size and mtime, the same rule that
+  keys the staged copies, so a rewritten fixture is read again;
+- ``base(spark, sf_dir, name)`` — a known-schema batch read (no
+  inference job), ``events.ts`` normalized; ``raw`` is the same read
+  without the normalization, for staged copies that keep the fixture's
+  own schema;
+- ``event_stream(spark, sf_dir, stage=None, **options)`` — the
+  ``events`` file stream with the same schema, ``ts`` normalized.
+
+Every fixture read sets the nanosAsLong conf first (``_nanos_as_long``).
+
 The driver's synthetic star schema (TESTDATA.md) stands in for the
 reference's two MySQL tables via the FIXTURES.md §2 mapping:
 
@@ -31,9 +49,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .etl.violations import build_violations
 from .etl.weather import build_weather_daily
+from .scratch import generation, links, staged
 
 BASE_TABLES = [
     "region",
@@ -49,24 +69,65 @@ BASE_TABLES = [
 ]
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read that works in ANY caller-supplied SparkSession.
+def fixture_path(sf_dir: str, name: str) -> str:
+    """Where base table ``name`` lives: ``{sf_dir}/{name}.parquet``."""
+    if name not in BASE_TABLES:
+        raise KeyError(f"unknown base table {name!r}")
+    return f"{sf_dir}/{name}.parquet"
 
-    The ``events`` fixture stores ``ts`` as parquet TIMESTAMP(NANOS),
+
+def _nanos_as_long(spark: SparkSession) -> SparkSession:
+    """Set the legacy nanos conf on ``spark`` and return it.
+
+    The ``events`` fixture has stored ``ts`` as parquet TIMESTAMP(NANOS),
     which Spark's reader rejects (PARQUET_TYPE_ILLEGAL) unless
     ``spark.sql.legacy.parquet.nanosAsLong`` is set. Our own factory
-    (session.py) sets it at build time, but the engine must not depend on
-    being handed its own session — the conf is runtime-settable, so set
-    it defensively before every fixture read. Downstream normalization of
-    the resulting ``bigint`` ts lives in ``base()`` and the streaming
-    readers.
+    (session.py) sets it at build time, but the engine must work in ANY
+    caller-supplied session, and the conf is runtime-settable, so every
+    fixture read — inferred or known-schema, batch or stream — sets it
+    first. The resulting ``bigint`` ts is normalized by
+    ``normalize_event_ts``.
     """
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         # Spark builds lacking the legacy conf read nanos natively
         pass
-    return spark.read.parquet(path)
+    return spark
+
+
+# fixture path -> (generation, raw schema); see fixture_schema
+_SCHEMAS: dict[str, tuple[str, StructType]] = {}
+
+
+def fixture_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The raw parquet schema of base table ``name`` (a nanos ``ts`` is
+    a ``long``), inferred once per file generation in this process.
+
+    Inference is one Spark job even for one file, so it is memoized on
+    the path and on ``scratch.generation`` (size and mtime): a rewritten
+    fixture is inferred again. No session is part of the key: the
+    schema is a pure function of the file, given the nanosAsLong conf
+    that ``_nanos_as_long`` sets before every read (the package sets
+    no other parquet inference conf), so any session may reuse it.
+    """
+    path = fixture_path(sf_dir, name)
+    gen = generation(sf_dir, f"{name}.parquet")
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != gen:
+        hit = (gen, _nanos_as_long(spark).read.parquet(path).schema)
+        _SCHEMAS[path] = hit
+    return hit[1]
+
+
+def raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Base table ``name`` as stored (``ts`` not normalized), read with
+    its known schema: no inference job. For staged copies that must
+    keep the fixture's own schema; everything else reads ``base``."""
+    schema = fixture_schema(spark, sf_dir, name)
+    return _nanos_as_long(spark).read.schema(schema).parquet(
+        fixture_path(sf_dir, name)
+    )
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -83,8 +144,8 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
       because event-time operators (``withWatermark``) REQUIRE
       TimestampType and raise EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on NTZ.
 
-    Single choke point: both the batch catalog (``base``) and every
-    streaming reader that CONSUMES ``ts`` normalize through here. One
+    Single choke point: both the batch catalog (``base``) and the
+    event stream (``event_stream``) normalize through here. One
     intentional exception (ADVICE r12): streaming/backfill.py reads the
     raw fixture schema and prunes to a constant column — its plan never
     touches ts, and the raw schema is what lets the vectorized reader
@@ -99,20 +160,31 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 def base(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one base fixture table (columnar parquet scan; Catalyst prunes
-    columns and pushes predicates down to the reader)."""
-    if name not in BASE_TABLES:
-        raise KeyError(f"unknown base table {name!r}")
-    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    """Read one base fixture table (columnar parquet scan with a known
+    schema; Catalyst prunes columns and pushes predicates down to the
+    reader). ``events`` comes with its ``ts`` normalized."""
+    df = raw(spark, sf_dir, name)
     if name == "events":
         df = normalize_event_ts(df)
     return df
 
 
-# Per-session temp-view registration memo. The VALUE holds the session
-# object itself so the identity check below is immune to CPython id()
-# reuse after a session is garbage-collected.
-_VIEWS: dict[tuple[int, str], tuple[SparkSession, str]] = {}
+def event_stream(
+    spark: SparkSession, sf_dir: str, stage: str | None = None, **options
+) -> DataFrame:
+    """The ``events`` fixture as a parquet file stream, ``ts``
+    normalized. ``stage`` is a dir of files with the fixture's raw
+    schema (default: the shared ``events`` stage dir, one link to the
+    fixture file); ``options`` go to the stream reader."""
+    schema = fixture_schema(spark, sf_dir, "events")
+    if stage is None:
+        stage = staged("events", sf_dir, links(fixture_path(sf_dir, "events")))
+    return normalize_event_ts(
+        _nanos_as_long(spark)
+        .readStream.schema(schema)
+        .options(**options)
+        .parquet(stage)
+    )
 
 
 def _session_alive(spark: SparkSession) -> bool:
@@ -125,20 +197,12 @@ def _session_alive(spark: SparkSession) -> bool:
 def register_views(
     spark: SparkSession, sf_dir: str, names: "set[str] | list[str]"
 ) -> None:
-    """Register ONLY the named tables/views, memoized per (session,
-    sf_dir). The SQL-text path calls this with the tables a query
-    actually references — registering all 10 base tables eagerly per
-    query both widened the nanos-bug blast radius and re-paid parquet
-    footer reads on every ``run_sql`` call (VERDICT r1 'what's wrong' #2).
-    """
+    """Register ONLY the named tables/views as temp views. The SQL-text
+    path calls this with the tables a query actually references;
+    registering runs no Spark job (base tables read with their
+    memoized schema, the derived views come from the session's
+    materialization), so each call simply registers again."""
     for name in names:
-        key = (id(spark), name)
-        entry = _VIEWS.get(key)
-        if entry is not None:
-            sess, sf = entry
-            if sess is spark and sf == sf_dir and _session_alive(sess):
-                continue
-            _VIEWS.pop(key, None)
         if name in BASE_TABLES:
             df = base(spark, sf_dir, name)
         elif name == "violations":
@@ -148,7 +212,6 @@ def register_views(
         else:
             raise KeyError(f"unknown table/view {name!r}")
         df.createOrReplaceTempView(name)
-        _VIEWS[key] = (spark, sf_dir)
 
 
 # Session-local materialization of the derived tables, mirroring the
@@ -178,11 +241,11 @@ def _materialized(
 
 
 def release(spark: SparkSession | None = None) -> None:
-    """Cache-release hook: unpersist every session-local materialization,
-    drop the view-registration memo, and (when a session is given) clear
-    its SQL cache. Long-running processes (the bench loop, a notebook)
-    call this so persisted fact/dimension/sketch tables don't accumulate
-    executor memory across runs (VERDICT r1 'what's wrong' #3)."""
+    """Cache-release hook: unpersist every session-local materialization
+    and (when a session is given) clear its SQL cache. Long-running
+    processes (the bench loop, a notebook) call this so persisted
+    fact/dimension/sketch tables don't accumulate executor memory across
+    runs (VERDICT r1 'what's wrong' #3)."""
     from .caching import release_tracked
 
     for key, df in list(_MATERIALIZED.items()):
@@ -191,7 +254,6 @@ def release(spark: SparkSession | None = None) -> None:
         except Exception:
             pass
         _MATERIALIZED.pop(key, None)
-    _VIEWS.clear()
     release_tracked()
     if spark is not None and _session_alive(spark):
         try:

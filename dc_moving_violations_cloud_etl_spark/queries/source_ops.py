@@ -564,7 +564,7 @@ def _metadata_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("events", "event_id"),
         ):
             r = (
-                spark.read.parquet(f"{sf_dir}/{table}.parquet")
+                catalog.base(spark, sf_dir, table)
                 .agg(
                     F.count("*").alias("n"),
                     F.min(key).alias("mn"),

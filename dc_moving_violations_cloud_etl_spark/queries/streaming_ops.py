@@ -578,15 +578,13 @@ def _py_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..catalog import normalize_event_ts, read_parquet
-    from ..scratch import links, private_dir, staged
+    from ..catalog import event_stream
+    from ..scratch import private_dir
     from ..sources.py_sink import STREAM_SINK_NAME, make_jsonl_stream_sink
     from ..streaming.daily import _run_to_completion
 
     spark.dataSource.register(make_jsonl_stream_sink())
 
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     # fresh drain per run into a per-process dir: the round-trip
     # compares against the full fixture, so a warm checkpoint (no new
     # input -> no batches) would leave a stale output dir from an
@@ -595,11 +593,7 @@ def _py_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
 
-    stream = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
+    stream = event_stream(spark, sf_dir)
     try:
         _run_to_completion(
             spark,
@@ -714,25 +708,19 @@ def _occ_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cast."""
     import shutil as _shutil
 
-    from ..catalog import normalize_event_ts, read_parquet
+    from ..catalog import event_stream
     from ..operators import snapshots
     from ..scratch import private_dir, staged
     from ..streaming.backfill import multifile_writer
     from ..streaming.daily import _run_to_completion
 
-    path = f"{sf_dir}/events.parquet"
     # the backfill's 4-file backlog
-    stage = staged("backfill", sf_dir, multifile_writer(spark, path))
+    stage = staged("backfill", sf_dir, multifile_writer(spark, sf_dir))
     root = private_dir("occ_rollup")
     table_dir = os.path.join(root, "table")
     ckpt = os.path.join(root, "ckpt")
 
-    schema = read_parquet(spark, path).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = event_stream(spark, sf_dir, stage, maxFilesPerTrigger="1")
 
     def commit_batch(bdf, batch_id: int) -> None:
         agg = bdf.groupBy("event_type").agg(
@@ -826,25 +814,19 @@ def _chained_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..catalog import normalize_event_ts, read_parquet
-    from ..scratch import links, private_dir, staged
+    from ..catalog import event_stream
+    from ..scratch import private_dir
     from ..sources.py_sink import STREAM_SINK_NAME, make_jsonl_stream_sink
     from ..streaming.daily import _drain_memory_sink, _run_to_completion
 
     spark.dataSource.register(make_jsonl_stream_sink())
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = _hashlib.md5(f"chain:{sf_dir}".encode()).hexdigest()[:8]
     root = private_dir("chain")
     bronze = os.path.join(root, "bronze")
     ck1 = os.path.join(root, "ckpt")
 
     # stage 1: map-only ETL -> custom Python streaming sink (bronze)
-    src = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
+    src = event_stream(spark, sf_dir)
     stage1 = src.where(F.col("event_type") == "click").select(
         "event_id", "ts", "user_id", "value"
     )

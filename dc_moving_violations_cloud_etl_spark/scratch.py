@@ -3,8 +3,9 @@
 
 - ``fixture_dir(kind, sf_dir, *files)`` names the dir for one
   generation of a fixture: ``ROOT/<kind>-<sf_dir hash>-<generation>``,
-  the generation keyed on each source file's size and mtime, so a
-  regenerated fixture never reuses a stale copy. Each call sweeps the
+  the ``generation`` keyed on each source file's size and mtime, so a
+  regenerated fixture never reuses a stale copy (``catalog`` keys its
+  schema memo on the same rule). Each call sweeps the
   other generations of the same ``(kind, sf_dir)`` and nothing else:
   an unscoped sweep would delete the other fixtures' dirs on every
   sf0.001/sf0.01/sf0.1 alternation and defeat warm reuse.
@@ -49,16 +50,24 @@ def _digest(text: str) -> str:
     return hashlib.md5(text.encode()).hexdigest()[:8]
 
 
+def generation(sf_dir: str, *files: str) -> str:
+    """The generation of ``files`` (names inside ``sf_dir``): a digest
+    of each file's size and mtime, so it changes whenever one of them
+    is rewritten."""
+    stats = [os.stat(os.path.join(sf_dir, f)) for f in files]
+    return _digest(
+        ":".join(
+            f"{f}={st.st_size}-{st.st_mtime_ns}" for f, st in zip(files, stats)
+        )
+    )
+
+
 def fixture_dir(kind: str, sf_dir: str, *files: str) -> str:
     """``ROOT/<kind>-<sf_dir hash>-<generation>`` for ``files`` (names
     inside ``sf_dir``; list every input the dir derives from, or a
     regenerated input would serve a stale copy). Not created."""
-    stats = [os.stat(os.path.join(sf_dir, f)) for f in files]
-    ident = ":".join(
-        f"{f}={st.st_size}-{st.st_mtime_ns}" for f, st in zip(files, stats)
-    )
     prefix = f"{kind}-{_digest(sf_dir)}-"
-    name = prefix + _digest(ident)
+    name = prefix + generation(sf_dir, *files)
     try:
         entries = os.listdir(ROOT)
     except FileNotFoundError:

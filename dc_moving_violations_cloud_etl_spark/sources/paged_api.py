@@ -302,11 +302,12 @@ def paged_fixture_path(sf_dir: str) -> str:
 
     import pyarrow.parquet as pq
 
+    from ..catalog import fixture_path
     from ..scratch import staged
 
     def write(out: str) -> None:
         os.makedirs(out)
-        t = pq.read_table(f"{sf_dir}/events.parquet").sort_by("event_id")
+        t = pq.read_table(fixture_path(sf_dir, "events")).sort_by("event_id")
         pq.write_table(
             t, os.path.join(out, "events_sorted.parquet"),
             row_group_size=DEFAULT_PAGE_SIZE,

@@ -277,10 +277,10 @@ def run_sql(
     (``violations`` / ``weather_daily`` + the base fixtures), exactly as
     a reference user would against their MySQL instance.
 
-    Registration is LAZY (only tables the text references) and memoized
-    per (session, sf_dir) in ``catalog.register_views`` — a
-    violations-only query never touches the other fixtures' parquet
-    footers, and repeated text queries re-pay nothing.
+    Registration is LAZY (only tables the text references) and runs no
+    Spark job (``catalog.register_views``): a violations-only query
+    never touches the other fixtures, and the fixtures it does read
+    come with their memoized schema.
     """
     catalog.register_views(spark, sf_dir, referenced_tables(text))
     enable_mysql_compat(spark)

@@ -18,8 +18,8 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_event_ts, read_parquet
-from ..scratch import links, staged
+from ..catalog import event_stream
+from ..scratch import staged
 
 
 # Stateful streaming operators instantiate one state store PER SHUFFLE
@@ -101,16 +101,10 @@ def daily_rollup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day window × event_type: count + exact value sum,
     computed by a real streaming query (file source → availableNow →
     memory sink), returned as a batch DataFrame."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema  # ts arrives as nanos long
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     name = f"daily_rollup_{tag}"
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
+    events = event_stream(spark, sf_dir)
 
     agg = events.groupBy(
         F.window("ts", "1 day").alias("win"), F.col("event_type")
@@ -151,16 +145,10 @@ def late_data_watermark_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
     hence fully oracle-checkable: the DuckDB twin drops windows whose end
     exceeds max(ts) - INTERVAL 1 DAY.
     """
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"wm:{sf_dir}".encode()).hexdigest()[:8]
     name = f"late_rollup_{tag}"
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
+    events = event_stream(spark, sf_dir)
 
     agg = (
         events.withWatermark("ts", "1 day")
@@ -196,16 +184,10 @@ def session_window_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose window end (last event + gap) the final watermark
     (max ts − 1 day) has passed — deterministic under availableNow, so
     the DuckDB gaps-and-islands oracle filters on the same cutoff."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"sessw:{sf_dir}".encode()).hexdigest()[:8]
     name = f"session_window_{tag}"
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
+    events = event_stream(spark, sf_dir)
 
     agg = (
         events.withWatermark("ts", "1 day")
@@ -255,14 +237,13 @@ def update_mode_counts_streaming(
     fully oracle-checkable (= the flat per-type counts)."""
     from .upsert import split_writer
 
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     name = "update_mode_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged("split", sf_dir, split_writer(spark, path)))
+    events = event_stream(
+        spark,
+        sf_dir,
+        staged("split", sf_dir, split_writer(spark, sf_dir)),
+        maxFilesPerTrigger="1",
     )
     agg = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events")
@@ -294,16 +275,10 @@ def hopping_window_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows emit. With availableNow the final watermark is
     max(ts) - 1 day; the oracle drops windows whose END the watermark
     has not passed — deterministic, fully hash-checkable."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"hop:{sf_dir}".encode()).hexdigest()[:8]
     name = f"hop_rollup_{tag}"
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
+    events = event_stream(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 day")
         .groupBy(

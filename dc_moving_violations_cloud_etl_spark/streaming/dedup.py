@@ -14,7 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_event_ts, read_parquet
+from ..catalog import event_stream, fixture_path
 from ..scratch import links, staged
 from .daily import _drain_memory_sink, _run_to_completion
 
@@ -27,8 +27,7 @@ def dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emitted rows land in a memory sink and are rolled up per day in
     batch — deterministic under availableNow, so the DuckDB twin is a
     plain per-day distinct count over the (single-copy) fixture."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
+    path = fixture_path(sf_dir, "events")
     tag = hashlib.md5(f"dedup:{sf_dir}".encode()).hexdigest()[:8]
     name = f"stream_dedup_{tag}"
 
@@ -39,11 +38,7 @@ def dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         links(path)(d)
         os.symlink(path, os.path.join(d, "copy2_" + os.path.basename(path)))
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("dedup", sf_dir, doubled)
-        )
-    )
+    events = event_stream(spark, sf_dir, staged("dedup", sf_dir, doubled))
 
     deduped = (
         events.select("event_id", "ts")

@@ -19,8 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_event_ts, read_parquet
-from ..scratch import fixture_dir, links, staged
+from ..catalog import event_stream
+from ..scratch import fixture_dir
 from .daily import _run_to_completion
 
 
@@ -28,8 +28,6 @@ def file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events stream → checkpointed append parquet sink → manifest-aware
     batch read of the sink → per-type aggregate (equal to the flat
     batch aggregate over the source)."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     # the checkpoint records the source dir's path, so this kind must be
     # renamed whenever the source's kind changes: a warm checkpoint over
     # a renamed source fails to resume ("Wrong basePath")
@@ -40,11 +38,7 @@ def file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Drive the sink. On a warm checkpoint the availableNow run sees no
     # new files and commits nothing — the manifest (and therefore the
     # read below) is unchanged: exactly-once across replays.
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
+    events = event_stream(spark, sf_dir)
     projected = events.select(
         "event_id",
         "event_type",

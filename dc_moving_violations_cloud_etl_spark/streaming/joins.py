@@ -15,8 +15,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_event_ts, read_parquet
-from ..scratch import links, staged
+from ..catalog import base, event_stream
 from .daily import _drain_memory_sink, _run_to_completion
 
 LOWER_S = 1
@@ -33,19 +32,11 @@ def interval_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chaining an aggregate behind a stream-stream join is a second
     stateful operator — separable here, and the join is the capability
     under test)."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"ssjoin:{sf_dir}".encode()).hexdigest()[:8]
     name = f"interval_join_{tag}"
-    stage = staged("events", sf_dir, links(path))
-
-    def _stream():
-        return normalize_event_ts(
-            spark.readStream.schema(schema).parquet(stage)
-        )
 
     errors = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "error")
         .select(
             F.col("user_id").alias("e_user"),
@@ -55,7 +46,7 @@ def interval_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("e_ts", "1 hour")
     )
     clicks = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -106,20 +97,11 @@ def static_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     state at all, unlike stream-stream); per-segment counts aggregate
     in complete mode. Deterministic under availableNow, so the oracle
     is the identical batch join."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"stjoin:{sf_dir}".encode()).hexdigest()[:8]
     name = f"static_join_{tag}"
 
-    ev = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
-
-    dim = read_parquet(spark, f"{sf_dir}/customer.parquet").select(
-        F.col("c_custkey"), F.col("c_mktsegment")
-    )
+    ev = event_stream(spark, sf_dir)
+    dim = base(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
 
     joined = ev.join(
         F.broadcast(dim), ev["user_id"] == dim["c_custkey"], "inner"
@@ -177,9 +159,7 @@ def left_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee that unmatched facts surface instead of silently dropping
     (the reconciliation shape: "which errors had no click precursor").
     """
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
-    batch = normalize_event_ts(read_parquet(spark, path))
+    batch = base(spark, sf_dir, "events")
     wm_base = batch.agg(
         F.least(
             F.max(F.when(F.col("event_type") == "error", F.col("ts"))),
@@ -190,15 +170,9 @@ def left_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(f"ssloj:{sf_dir}".encode()).hexdigest()[:8]
     name = f"outer_join_{tag}"
-    stage = staged("events", sf_dir, links(path))
-
-    def _stream():
-        return normalize_event_ts(
-            spark.readStream.schema(schema).parquet(stage)
-        )
 
     errors = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "error")
         .select(
             F.col("user_id").alias("e_user"),
@@ -208,7 +182,7 @@ def left_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("e_ts", "1 hour")
     )
     clicks = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -283,9 +257,7 @@ def full_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     precursor AND which clicks led to no error") that a lossless
     stream-stream audit needs.
     """
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
-    batch = normalize_event_ts(read_parquet(spark, path))
+    batch = base(spark, sf_dir, "events")
     wm_base = batch.agg(
         F.least(
             F.max(F.when(F.col("event_type") == "error", F.col("ts"))),
@@ -296,15 +268,9 @@ def full_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(f"ssfoj:{sf_dir}".encode()).hexdigest()[:8]
     name = f"full_outer_join_{tag}"
-    stage = staged("events", sf_dir, links(path))
-
-    def _stream():
-        return normalize_event_ts(
-            spark.readStream.schema(schema).parquet(stage)
-        )
 
     errors = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "error")
         .select(
             F.col("user_id").alias("e_user"),
@@ -314,7 +280,7 @@ def full_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("e_ts", "1 hour")
     )
     clicks = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -389,19 +355,11 @@ def left_semi_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     not-yet-matched left rows and drops each on first match instead of
     buffering every pair.
     """
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"sssemi:{sf_dir}".encode()).hexdigest()[:8]
     name = f"semi_join_{tag}"
-    stage = staged("events", sf_dir, links(path))
-
-    def _stream():
-        return normalize_event_ts(
-            spark.readStream.schema(schema).parquet(stage)
-        )
 
     errors = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "error")
         .select(
             F.col("user_id").alias("e_user"),
@@ -411,7 +369,7 @@ def left_semi_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("e_ts", "1 hour")
     )
     clicks = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -467,9 +425,7 @@ def right_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER the sink) apply symmetrically, and the DuckDB twin
     pre-filters CLICKS (the preserved side) by the identical cutoff.
     """
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
-    batch = normalize_event_ts(read_parquet(spark, path))
+    batch = base(spark, sf_dir, "events")
     wm_base = batch.agg(
         F.least(
             F.max(F.when(F.col("event_type") == "error", F.col("ts"))),
@@ -480,15 +436,9 @@ def right_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(f"ssroj:{sf_dir}".encode()).hexdigest()[:8]
     name = f"right_outer_join_{tag}"
-    stage = staged("events", sf_dir, links(path))
-
-    def _stream():
-        return normalize_event_ts(
-            spark.readStream.schema(schema).parquet(stage)
-        )
 
     errors = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "error")
         .select(
             F.col("user_id").alias("e_user"),
@@ -498,7 +448,7 @@ def right_outer_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("e_ts", "1 hour")
     )
     clicks = (
-        _stream()
+        event_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),

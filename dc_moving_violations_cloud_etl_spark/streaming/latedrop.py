@@ -25,7 +25,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_event_ts, read_parquet
+from ..catalog import base
 from ..scratch import private_dir, staged
 from .daily import PROGRESS_LEDGER, _drain_memory_sink, _run_to_completion
 
@@ -35,14 +35,14 @@ LATE_BOUND = "2024-01-06"
 MID_BOUND = "2024-01-18"
 
 
-def _latedrop_writer(spark: SparkSession, path: str):
+def _latedrop_writer(spark: SparkSession, sf_dir: str):
     """A ``scratch.staged`` writer that stages the fixture as (bulk,
     mid, late) parquet files with ascending pinned mtimes, so the file
     source (oldest-first) replays them in that order."""
 
     def write(out: str) -> None:
         os.makedirs(out)
-        ev = normalize_event_ts(read_parquet(spark, path))
+        ev = base(spark, sf_dir, "events")
         parts = [
             ("f1_bulk", ev.where(F.col("ts") >= MID_BOUND), 1_000_000),
             (
@@ -73,14 +73,13 @@ def late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bulk, mid, late) backlog at ``maxFilesPerTrigger=1`` and reconcile
     the books: emitted sealed windows + their event totals from the
     sink, dropped-late total from the engine's progress telemetry."""
-    path = f"{sf_dir}/events.parquet"
-    stage = staged("latedrop", sf_dir, _latedrop_writer(spark, path))
+    stage = staged("latedrop", sf_dir, _latedrop_writer(spark, sf_dir))
     tag = hashlib.md5(f"latedrop:{sf_dir}".encode()).hexdigest()[:8]
     name = f"stream_latedrop_{tag}"
 
-    schema = spark.read.parquet(stage).schema
+    # the stage holds normalized rows, so it has base's schema
     ev = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(base(spark, sf_dir, "events").schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )

@@ -27,6 +27,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import fixture_path
 from ..scratch import private_dir
 from .daily import _drain_memory_sink
 
@@ -259,14 +260,13 @@ def custom_source_ingest_streaming(
     and oracle-checkable."""
     import hashlib
 
-    path = f"{sf_dir}/events.parquet"
     # fresh offsets every run, private to this process
     ckpt = private_dir("cstream_ckpt")
 
     spark.dataSource.register(make_daily_ingest_source())
     ev = (
         spark.readStream.format(STREAM_SOURCE_NAME)
-        .option("path", path)
+        .option("path", fixture_path(sf_dir, "events"))
         .load()
         .withColumn("ts", F.timestamp_micros("ts_us"))
     )

@@ -22,8 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..catalog import normalize_event_ts, read_parquet
-from ..scratch import links, staged
+from ..catalog import event_stream
 from .daily import _drain_memory_sink, _run_to_completion
 
 GAP_MS = 30 * 60 * 1000
@@ -95,16 +94,10 @@ def stateful_sessions_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events stream → applyInPandasWithState sessionization → memory
     sink, returned as a batch DataFrame (deterministic under
     availableNow; oracle = gaps-and-islands SQL)."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"state:{sf_dir}".encode()).hexdigest()[:8]
     name = f"stateful_sessions_{tag}"
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            staged("events", sf_dir, links(path))
-        )
-    )
+    events = event_stream(spark, sf_dir)
 
     sessions = (
         events.select("user_id", "ts")

@@ -27,8 +27,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_event_ts, read_parquet
-from ..scratch import fixture_dir, links, staged
+from ..catalog import event_stream
+from ..scratch import fixture_dir
 from .daily import _drain_memory_sink, _run_to_completion
 
 
@@ -42,8 +42,6 @@ def _ensure_checkpoint(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     sink. Also force-creates the driver's StateStoreCoordinator RPC
     endpoint (registered lazily with a session's FIRST streaming query)
     so the warm path's executor-side state readers can resolve it."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     tag = hashlib.md5(f"ssread:{sf_dir}".encode()).hexdigest()[:8]
     ckpt = fixture_dir("ssread_ckpt", sf_dir, "events.parquet")
     name = f"ssread_{tag}"
@@ -54,11 +52,7 @@ def _ensure_checkpoint(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
     if not committed:
         shutil.rmtree(ckpt, ignore_errors=True)  # partial run → start over
-        events = normalize_event_ts(
-            spark.readStream.schema(schema).parquet(
-                staged("events", sf_dir, links(path))
-            )
-        )
+        events = event_stream(spark, sf_dir)
         agg = events.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n")
         )

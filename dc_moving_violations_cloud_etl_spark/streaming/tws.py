@@ -29,7 +29,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_event_ts, read_parquet
+from ..catalog import event_stream
 from ..scratch import staged
 from .daily import _drain_memory_sink, _run_to_completion
 from .upsert import split_writer
@@ -90,15 +90,14 @@ def transform_with_state_totals(
     ``transformWithStateInPandas`` running per-user totals on RocksDB
     state → memory sink; final = each user's LAST cumulative
     emission."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     name = "tws_totals_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        # the even/odd split staged for the foreachBatch upsert
-        .parquet(staged("split", sf_dir, split_writer(spark, path)))
+    # the even/odd split staged for the foreachBatch upsert
+    events = event_stream(
+        spark,
+        sf_dir,
+        staged("split", sf_dir, split_writer(spark, sf_dir)),
+        maxFilesPerTrigger="1",
     )
     keyed = events.select(
         "user_id",

@@ -23,7 +23,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_event_ts, read_parquet
+from ..catalog import event_stream, raw
 from ..scratch import private_dir, staged
 from .daily import _run_to_completion
 
@@ -39,7 +39,7 @@ def _batch_aggregate(df: DataFrame) -> DataFrame:
     )
 
 
-def split_writer(spark: SparkSession, path: str):
+def split_writer(spark: SparkSession, sf_dir: str):
     """A ``scratch.staged`` writer that stages the events fixture as TWO
     parquet files (even/odd event_id) so ``maxFilesPerTrigger=1``
     drives REAL multi-batch execution: the second micro-batch exercises
@@ -47,7 +47,7 @@ def split_writer(spark: SparkSession, path: str):
     split is deterministic so re-runs see identical batches."""
 
     def write(out: str) -> None:
-        src = read_parquet(spark, path)
+        src = raw(spark, sf_dir, "events")
         for i in (0, 1):
             (
                 src.where(F.col("event_id") % 2 == i)
@@ -65,8 +65,6 @@ def incremental_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     and read one file per trigger, so the merge genuinely runs
     incrementally across micro-batches (associativity makes the final
     store independent of the slicing — proven in tests)."""
-    path = f"{sf_dir}/events.parquet"
-    schema = read_parquet(spark, path).schema
     # store and checkpoint are ONE unit of state, so both live in one
     # per-process dir emptied on every run: a checkpoint left by a
     # killed run ("all input processed") is never resumed against a
@@ -75,10 +73,11 @@ def incremental_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = os.path.join(root, "store")
     ckpt = os.path.join(root, "ckpt")
 
-    events = normalize_event_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged("split", sf_dir, split_writer(spark, path)))
+    events = event_stream(
+        spark,
+        sf_dir,
+        staged("split", sf_dir, split_writer(spark, sf_dir)),
+        maxFilesPerTrigger="1",
     )
 
     def merge(batch_df: DataFrame, _batch_id: int) -> None:

@@ -385,7 +385,7 @@ def test_parquet_aggregate_pushdown_fires(spark, sf_dir):
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").agg(
+        df = catalog.base(spark, sf_dir, "lineitem").agg(
             F.count("*"), F.min("l_orderkey"), F.max("l_orderkey")
         )
         plan = _plan(df)
